@@ -3,7 +3,9 @@ package graft.repl
 import java.io.{BufferedReader, InputStreamReader, PrintStream}
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
+import graft.operators.Staged
 import graft.sinks.CsvExport
 import graft.sources.Ingest
 import graft.{GraftSession, Tables}
@@ -157,39 +159,85 @@ object SqlRepl {
     walk(args.toList, CliConf())
   }
 
+  /** The table a workbook load registers (the reference's table name,
+    * main.rs:181). The load's staged RDD carries the same name. */
+  val WorkbookTable = "excel_rows"
+
   /** The reference's one workflow in one command
     * (main.rs:25-34, 130-177): `-f file.xlsx -s Sheet1` loads the sheet
-    * as table `excel_rows` (the reference's table name, main.rs:181),
-    * enforces key uniqueness on the first column (its
-    * `idx_service_name` unique index; `--unique c1,c2` overrides,
+    * as table `excel_rows`, enforces key uniqueness on the first column
+    * (its `idx_service_name` unique index; `--unique c1,c2` overrides,
     * `--no-unique` disables), then drops into the SQL REPL. Without
     * `-f`, the positional arg is a parquet data dir (graft's native
-    * mode). Separated from `main` so tests can drive it end-to-end. */
+    * mode). Separated from `main` so tests can drive it end-to-end.
+    *
+    * `excel_rows` is a snapshot taken at load, as in the reference's
+    * SQLite import: the workbook is parsed once, and every statement
+    * reads the staged rows; edit the file and load it again to see the
+    * change. The rows are held in block-manager storage, and
+    * `spark.graft.staging.reliable` applies to them as to every staged
+    * frame ([[loadWorkbook]] says when they are freed). */
   def runCli(args: Array[String], spark: SparkSession,
              in: BufferedReader, out: PrintStream,
              interactive: Boolean = false): Unit = {
     val c = parseArgs(args.toIndexedSeq)
     c.file match {
       case Some(f) =>
-        val reader = spark.read.format("graft.sources.xlsx.XlsxDataSource")
-          .option("path", f)
-        c.sheet.foreach(s => reader.option("sheet", s))
-        if (c.coerceZero) reader.option("coerce", "zero")
-        val df = reader.load()
-        val keyCols = c.unique.map {
-          case Nil  => Seq(df.columns.head)
-          case cols => cols
-        }
-        val checked = keyCols.fold(df)(ks => Ingest.assertUnique(df, ks))
-        checked.createOrReplaceTempView("excel_rows")
+        val df = loadWorkbook(spark, f, c)
         out.println(s"Loaded $f${c.sheet.fold("")(s => s" sheet $s")} " +
-          s"as table excel_rows (${df.columns.mkString(", ")})")
+          s"as table $WorkbookTable (${df.columns.mkString(", ")})")
       case None =>
         Tables.registerAll(spark, c.dataDir.getOrElse("/root/testdata/sf0.001"))
     }
     val repl = new SqlRepl(spark, out, historyFile = c.history)
     if (interactive) repl.interactiveLoop() else repl.loop(in)
   }
+
+  /** Parse workbook `f` once, check its keys, and register the rows as
+    * `excel_rows`.
+    *
+    * The rows are staged by [[Staged.checkpointStage]]: held in
+    * block-manager storage (local checkpoint), or written as a reliable
+    * checkpoint when `spark.graft.staging.reliable=true`. The key check
+    * and every later statement read the staged rows, not the file.
+    *
+    * Lifetime: a load replaces the session's `excel_rows` only after
+    * its checks pass, then frees the rows of the load it replaced. A
+    * failed load (a corrupt sheet, duplicate keys) frees what it staged
+    * and leaves the previous `excel_rows`, if any, queryable. */
+  private def loadWorkbook(spark: SparkSession, f: String, c: CliConf): DataFrame = {
+    val reader = spark.read.format("graft.sources.xlsx.XlsxDataSource")
+      .option("path", f)
+    c.sheet.foreach(s => reader.option("sheet", s))
+    if (c.coerceZero) reader.option("coerce", "zero")
+    val df = reader.load()
+    if (df.columns.isEmpty)
+      throw new IllegalArgumentException(
+        s"xlsx: ${c.sheet.fold("the first sheet")(s => s"sheet $s")} of $f " +
+          s"has no rows: nothing to load as $WorkbookTable")
+    val keyCols = c.unique.map {
+      case Nil  => Seq(df.columns.head)
+      case cols => cols
+    }
+    GraftInternal.unpersistOnFailure(spark.sparkContext, s"load $WorkbookTable") {
+      val staged = Staged.checkpointStage(df, eager = true)
+      keyCols.foreach(ks => Ingest.assertUnique(staged, ks))
+      GraftInternal.backingRdds(staged).foreach(_.setName(WorkbookTable))
+      SqlRepl.synchronized { // one swap at a time: no replaced rows are missed
+        val replaced = stagedRows(spark)
+        staged.createOrReplaceTempView(WorkbookTable)
+        replaced.foreach(_.unpersist(blocking = false))
+      }
+      staged
+    }
+  }
+
+  /** The staged rows behind the session's current `excel_rows`, when a
+    * workbook load registered it. */
+  private def stagedRows(spark: SparkSession): Seq[RDD[_]] =
+    if (!spark.catalog.tableExists(WorkbookTable)) Nil
+    else GraftInternal.backingRdds(spark.table(WorkbookTable))
+      .filter(_.name == WorkbookTable)
 
   /** Entry point. `runMain graft.repl.SqlRepl <dataDir>` (parquet mode)
     * or `runMain graft.repl.SqlRepl -f file.xlsx -s Sheet1` (reference

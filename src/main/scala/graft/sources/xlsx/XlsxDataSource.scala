@@ -44,7 +44,7 @@ class XlsxDataSource extends TableProvider with DataSourceRegister {
 }
 
 private[xlsx] final case class XlsxConf(
-    paths: Seq[String], sheet: Option[String], header: Boolean,
+    path: String, paths: Seq[String], sheet: Option[String], header: Boolean,
     coerceZero: Boolean, inferRows: Int)
 
 private[xlsx] object XlsxDataSource {
@@ -59,7 +59,7 @@ private[xlsx] object XlsxDataSource {
         f.listFiles((_, n) => n.toLowerCase.endsWith(".xlsx"))
           .map(_.getAbsolutePath).sorted.toSeq
       else path.split(",").map(_.trim).toSeq
-    XlsxConf(paths,
+    XlsxConf(path, paths,
       Option(o.get("sheet")),
       Option(o.get("header")).forall(_.toBoolean),
       Option(o.get("coerce")).contains("zero"),
@@ -76,12 +76,15 @@ private[xlsx] object XlsxDataSource {
   }
 
   def infer(conf: XlsxConf): StructType = {
-    val zip = new ZipFile(conf.paths.head)
+    val file = conf.paths.headOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"xlsx: no .xlsx file in directory ${conf.path}"))
+    val zip = new ZipFile(file)
     try {
       val shared = XlsxParsing.sharedStrings(zip)
       val (_, sheetPath) = targetSheets(zip, conf).headOption.getOrElse(
         throw new IllegalArgumentException(
-          s"xlsx: sheet ${conf.sheet} not found in ${conf.paths.head}"))
+          s"xlsx: sheet ${conf.sheet.getOrElse("")} not found in $file"))
       val it = XlsxParsing.rows(zip, sheetPath, shared)
       if (!it.hasNext) return StructType(Nil)
       val first = it.next()

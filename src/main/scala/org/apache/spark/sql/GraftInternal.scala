@@ -1,12 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.util.CallSite
 
 /** Bridge to `private[sql]` Column↔Expression converters, so graft's
   * native Catalyst expressions can surface as Columns without going
-  * through the string SQL parser. Lives in the spark.sql package for
-  * visibility only; contains no logic.
+  * through the string SQL parser, and to the `private[spark]` state the
+  * staging helpers below read. Lives in the spark.sql package for
+  * visibility only.
   */
 object GraftInternal {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -47,6 +51,35 @@ object GraftInternal {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The RDDs `df`'s analyzed plan reads as checkpointed relations,
+    * including those under a temp view (`spark.table(view)`). */
+  def backingRdds(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
+  private val runTags = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Run `body`; if it throws, unpersist every RDD it created that is
+    * still persisted, then rethrow. An eager `localCheckpoint` persists
+    * its RDD before the materializing job runs, so when that job fails
+    * (a corrupt input) the RDD stays persisted and no handle to it
+    * reaches the caller. The RDDs `body` created are told apart by a
+    * call site unique to this run (`site` plus a counter), which also
+    * names them in the Spark UI. */
+  def unpersistOnFailure[T](sc: SparkContext, site: String)(body: => T): T = {
+    val tag = s"$site #${runTags.incrementAndGet()}"
+    val previous = sc.getLocalProperty(CallSite.SHORT_FORM)
+    sc.setCallSite(tag)
+    try body
+    catch {
+      case e: Throwable =>
+        sc.getPersistentRDDs.values.filter(_.creationSite.shortForm == tag)
+          .foreach(_.unpersist(blocking = false))
+        throw e
+    } finally sc.setLocalProperty(CallSite.SHORT_FORM, previous)
+  }
 
   /** Block until the async listener bus has delivered every queued
     * event (QueryExecutionListener callbacks included). Specs that

@@ -169,6 +169,139 @@ class ReplSpec extends TestSpark {
     assert(run(Array("--no-unique")).contains("as table excel_rows"))
   }
 
+  // -- workbook load: parse once, staged rows and their lifetime ------------
+
+  private def workbook(name: String, rows: Seq[Seq[Any]]): String = {
+    val p = new java.io.File(Files.createTempDirectory("cli-wb").toFile, name)
+      .getAbsolutePath
+    graft.sources.xlsx.XlsxWriter.write(p, "Sheet1", rows)
+    p
+  }
+
+  private def services(names: String*): Seq[Seq[Any]] =
+    Seq("service_name", "count") +: names.zipWithIndex.map {
+      case (n, i) => Seq(n, i + 1)
+    }
+
+  /** Load workbook `p` through the CLI; returns what it printed. */
+  private def load(p: String, flags: String*): String = {
+    import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader}
+    val bos = new ByteArrayOutputStream()
+    SqlRepl.runCli((flags ++ Seq("-f", p, "-s", "Sheet1")).toArray, spark,
+      new BufferedReader(new StringReader("quit\n")),
+      new PrintStream(bos, true, "UTF-8"))
+    bos.toString("UTF-8")
+  }
+
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def names(): Seq[String] =
+    spark.sql("SELECT service_name FROM excel_rows ORDER BY service_name")
+      .collect().map(_.getString(0)).toSeq
+
+  test("workbook load: three loads hold one staged RDD, and a workbook " +
+       "rewritten at the same path is seen by the next load") {
+    val p = workbook("svc.xlsx", services("a", "b"))
+    val before = persisted
+    (1 to 3).foreach(_ => load(p))
+    val held = spark.sparkContext.getPersistentRDDs.values
+      .filter(_.name == SqlRepl.WorkbookTable)
+    assert(held.size === 1, held)
+    assert((persisted -- before).size === 1)
+    assert(names() === Seq("a", "b"))
+    graft.sources.xlsx.XlsxWriter.write(p, "Sheet1", services("c", "d", "e"))
+    load(p)
+    assert(names() === Seq("c", "d", "e"))
+    assert(spark.sparkContext.getPersistentRDDs.values
+      .count(_.name == SqlRepl.WorkbookTable) === 1)
+  }
+
+  test("workbook load: a duplicate-key load frees its own staged rows and " +
+       "leaves the previous excel_rows answering") {
+    load(workbook("good.xlsx", services("a", "b")))
+    val before = persisted
+    val dup = workbook("dup.xlsx", services("x", "x", "y"))
+    intercept[graft.sources.Ingest.DuplicateKeysException](load(dup))
+    assert((persisted -- before).isEmpty)
+    assert(names() === Seq("a", "b"))
+  }
+
+  test("workbook load: statements read the staged rows and never scan the " +
+       "xlsx again") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val p = workbook("once.xlsx", services("a", "b", "c"))
+    // stages whose RDD lineage reads a DataSource V2 scan (the xlsx
+    // source is the only one these statements could reach)
+    val stages, scanStages = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        if (e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
+          scanStages.incrementAndGet()
+      }
+    }
+    def counted(body: => Unit): (Int, Int) = {
+      org.apache.spark.sql.GraftInternal.waitForListeners(spark)
+      stages.set(0); scanStages.set(0)
+      body
+      org.apache.spark.sql.GraftInternal.waitForListeners(spark)
+      (stages.get, scanStages.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (_, loadScans) = counted(load(p))
+      assert(loadScans >= 1, "the probe must see the load's own scan")
+      // a snapshot: the statements need the file no more
+      new java.io.File(p).delete()
+      val repl = new SqlRepl(spark)
+      val (ran, scans) = counted(Seq(
+        "SELECT count(*) AS n FROM excel_rows",
+        "SELECT service_name FROM excel_rows WHERE count > 1 ORDER BY 1",
+        "SELECT max(count) AS m, min(service_name) AS s FROM excel_rows",
+        "SELECT service_name, rank() OVER (ORDER BY count DESC) AS r " +
+          "FROM excel_rows").foreach(repl.runLine))
+      assert(ran >= 4)
+      assert(scans === 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(names() === Seq("a", "b", "c"))
+  }
+
+  test("workbook load: an empty sheet fails with a named error") {
+    val p = workbook("empty.xlsx", Nil)
+    val e = intercept[IllegalArgumentException](load(p))
+    assert(e.getMessage.contains(p) && e.getMessage.contains("Sheet1"),
+      e.getMessage)
+  }
+
+  test("workbook load: a corrupt sheet fails the load itself and leaves no " +
+       "staged RDD and no excel_rows view") {
+    import scala.jdk.CollectionConverters._
+    import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+    // enough rows that schema inference (the first ~100) parses cleanly
+    // and the cut surfaces only while the rows are staged
+    val good = workbook("whole.xlsx",
+      services((1 to 400).map(i => s"svc$i"): _*))
+    val cut = new java.io.File(new java.io.File(good).getParent, "cut.xlsx")
+      .getAbsolutePath
+    val zin = new ZipFile(good)
+    val zos = new ZipOutputStream(new java.io.FileOutputStream(cut))
+    try zin.entries().asScala.foreach { e =>
+      val bytes = zin.getInputStream(e).readAllBytes()
+      zos.putNextEntry(new ZipEntry(e.getName))
+      zos.write(
+        if (e.getName.endsWith("sheet1.xml")) bytes.take(bytes.length * 4 / 5)
+        else bytes)
+      zos.closeEntry()
+    } finally { zos.close(); zin.close() }
+    spark.catalog.dropTempView(SqlRepl.WorkbookTable)
+    val before = persisted
+    intercept[Exception](load(cut, "--no-unique"))
+    assert((persisted -- before).isEmpty)
+    assert(!spark.catalog.tableExists(SqlRepl.WorkbookTable))
+  }
+
   test("history: \\history lists, !N and !! recall, and the file persists " +
        "across REPL instances") {
     import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader}

@@ -87,4 +87,21 @@ class XlsxSourceSpec extends TestSpark {
     assert(df.select("service_name").as[String].collect().toSet ===
       Set("svc1a", "svc1b", "svc2a", "svc2b", "svc3a", "svc3b"))
   }
+
+  test("a missing sheet fails with an error that names it") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.xlsx.XlsxDataSource")
+        .option("sheet", "Nope").option("path", fixture).load()
+    }
+    assert(e.getMessage === s"xlsx: sheet Nope not found in $fixture")
+  }
+
+  test("a directory with no workbook fails with a named error") {
+    val dir = Files.createTempDirectory("xlsx-none").toFile.getAbsolutePath
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.xlsx.XlsxDataSource")
+        .option("path", dir).load()
+    }
+    assert(e.getMessage.contains(dir), e.getMessage)
+  }
 }
