@@ -372,8 +372,14 @@ object Dedup {
     * code (janino recompiles, ~1s/round of driver stall at any scale).
     * Checkpointing makes every round's plan a flat scan over the
     * previous round's blocks — constant analysis cost, and the
-    * generated code is identical from round 2 on, so the codegen cache
-    * hits. Each round's blocks are freed as soon as the next round is
+    * generated code is the same from round 2 on. It hits the codegen
+    * cache in sessions built by [[graft.GraftSession.tune]], which
+    * names classes without the AQE stage id and holds 1000 entries.
+    * Under Spark's defaults it did not: each round's new stage id gave
+    * the same code a new class name, and the 100-entry cache (one entry
+    * per class loader, driver and executor) evicted the rest, so every
+    * round and every run compiled again (CodegenCacheSpec pins this).
+    * Each round's blocks are freed as soon as the next round is
     * materialized. At billion-edge scale, swap the localCheckpoint for
     * a per-round stage table (same loop shape, executor-loss-safe).
     *

@@ -226,7 +226,7 @@ object SqlRepl {
       SqlRepl.synchronized { // one swap at a time: no replaced rows are missed
         val replaced = stagedRows(spark)
         staged.createOrReplaceTempView(WorkbookTable)
-        replaced.foreach(_.unpersist(blocking = false))
+        replaced.foreach(GraftInternal.unpersistQuietly)
       }
       staged
     }

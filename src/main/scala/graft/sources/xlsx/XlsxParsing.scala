@@ -55,28 +55,31 @@ object XlsxParsing {
     out.toSeq
   }
 
-  /** Shared strings table (index → string). */
+  /** Shared strings table (index → string). A string is the text of all
+    * its `<t>` runs (rich text has one per `<r>`); the text of a
+    * phonetic guide (`<rPh>`) is not part of it. */
   def sharedStrings(zip: ZipFile): IndexedSeq[String] = {
     val entry = zip.getEntry("xl/sharedStrings.xml")
     if (entry == null) return IndexedSeq.empty
     val r = xmlReader(zip.getInputStream(entry))
     val out = ArrayBuffer[String]()
     val sb = new StringBuilder
-    var inT = false
-    var depth = 0
+    var inT = false; var inRPh = false
     while (r.hasNext) r.next() match {
       case XMLStreamConstants.START_ELEMENT =>
         r.getLocalName match {
-          case "si" => sb.clear(); depth += 1
-          case "t"  => inT = true
-          case _    =>
+          case "si"  => sb.clear()
+          case "rPh" => inRPh = true
+          case "t"   => inT = !inRPh
+          case _     =>
         }
       case XMLStreamConstants.CHARACTERS if inT => sb.append(r.getText)
       case XMLStreamConstants.END_ELEMENT =>
         r.getLocalName match {
-          case "si" => out += sb.toString
-          case "t"  => inT = false
-          case _    =>
+          case "si"  => out += sb.toString
+          case "rPh" => inRPh = false
+          case "t"   => inT = false
+          case _     =>
         }
       case _ =>
     }
@@ -107,8 +110,28 @@ object XlsxParsing {
         nextRow = null
         var cells = scala.collection.mutable.Map[Int, Cell]()
         var inRow = false
-        var cellRef = ""; var cellType = ""; var inV = false; var inIs = false
+        var cellRef = ""; var cellType = ""
+        var inV = false; var inIs = false; var inRPh = false
         val sb = new StringBuilder
+        def putCell(): Unit = {
+          val raw = sb.toString
+          val idx = colIndex(cellRef)
+          if (idx >= 0) {
+            val cell = cellType match {
+              case "s" =>
+                // tolerate a malformed/empty shared-string index —
+                // one bad cell must not fail the whole partition
+                val v = raw.trim.toIntOption
+                  .filter(i => i >= 0 && i < shared.length)
+                  .map(shared).getOrElse("")
+                Cell(v, numeric = false)
+              case "str" | "inlineStr" => Cell(raw, numeric = false)
+              case "b" => Cell(if (raw.trim == "1") "true" else "false", numeric = false)
+              case _ => Cell(raw.trim, numeric = true)
+            }
+            cells(idx) = cell
+          }
+        }
         while (nextRow == null && !done) {
           if (!r.hasNext) { done = true; r.close() }
           else r.next() match {
@@ -118,8 +141,11 @@ object XlsxParsing {
                 cellRef = Option(r.getAttributeValue(null, "r")).getOrElse("")
                 cellType = Option(r.getAttributeValue(null, "t")).getOrElse("n")
               case "v" if inRow => inV = true; sb.clear()
-              case "is" if inRow => inIs = true
-              case "t" if inIs => inV = true; sb.clear()
+              // an inline string is the text of all its <t> runs, as in
+              // sharedStrings, without the phonetic guide
+              case "is" if inRow => inIs = true; sb.clear()
+              case "rPh" if inIs => inRPh = true
+              case "t" if inIs && !inRPh => inV = true
               case _ =>
             }
             case XMLStreamConstants.CHARACTERS if inV => sb.append(r.getText)
@@ -128,26 +154,10 @@ object XlsxParsing {
                 inRow = false
                 nextRow = cells.toMap
               case "c" if inRow => cellRef = ""; cellType = "n"
-              case "v" | "t" if inV =>
-                inV = false
-                val raw = sb.toString
-                val idx = colIndex(cellRef)
-                if (idx >= 0) {
-                  val cell = cellType match {
-                    case "s" =>
-                      // tolerate a malformed/empty shared-string index —
-                      // one bad cell must not fail the whole partition
-                      val v = raw.trim.toIntOption
-                        .filter(i => i >= 0 && i < shared.length)
-                        .map(shared).getOrElse("")
-                      Cell(v, numeric = false)
-                    case "str" | "inlineStr" => Cell(raw, numeric = false)
-                    case "b" => Cell(if (raw.trim == "1") "true" else "false", numeric = false)
-                    case _ => Cell(raw.trim, numeric = true)
-                  }
-                  cells(idx) = cell
-                }
-              case "is" => inIs = false
+              case "v" if inV => inV = false; putCell()
+              case "t" => inV = false
+              case "rPh" => inRPh = false
+              case "is" if inIs => inIs = false; putCell()
               case _ =>
             }
             case _ =>

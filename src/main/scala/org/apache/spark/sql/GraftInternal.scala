@@ -59,6 +59,16 @@ object GraftInternal {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
+  /** Free `rdd`'s blocks for good. Unlike `RDD.unpersist` this logs no
+    * WARN when `rdd` is a local checkpoint: that warning ("its lineage
+    * has been truncated and cannot be recomputed after unpersisting")
+    * is for a caller who may read the RDD again, and to a caller who
+    * drops staged rows on purpose (the REPL replacing `excel_rows`) it
+    * only reads like a fault. The RDD's own storage level is left as
+    * it was, so nothing may read or persist it afterwards. */
+  def unpersistQuietly(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   private val runTags = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Run `body`; if it throws, unpersist every RDD it created that is
@@ -76,7 +86,7 @@ object GraftInternal {
     catch {
       case e: Throwable =>
         sc.getPersistentRDDs.values.filter(_.creationSite.shortForm == tag)
-          .foreach(_.unpersist(blocking = false))
+          .foreach(unpersistQuietly)
         throw e
     } finally sc.setLocalProperty(CallSite.SHORT_FORM, previous)
   }

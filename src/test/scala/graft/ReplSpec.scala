@@ -227,6 +227,46 @@ class ReplSpec extends TestSpark {
     assert(names() === Seq("a", "b"))
   }
 
+  test("workbook load: a reload or a failed load frees staged rows without " +
+       "the lineage-truncated WARN") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("lineage-warn", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("lineage has been truncated")) warned.add(m)
+      }
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      // the probe sees the WARN RDD.unpersist logs for a local checkpoint
+      val probe = spark.sparkContext.parallelize(1 to 3).localCheckpoint()
+      probe.count()
+      probe.unpersist()
+      assert(warned.size === 1, warned)
+      warned.clear()
+      val p = workbook("twice.xlsx", services("a", "b"))
+      load(p)
+      load(p)
+      intercept[graft.sources.Ingest.DuplicateKeysException](
+        load(workbook("dup2.xlsx", services("x", "x"))))
+      assert(warned.isEmpty, warned)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(names() === Seq("a", "b"))
+  }
+
   test("workbook load: statements read the staged rows and never scan the " +
        "xlsx again") {
     import java.util.concurrent.atomic.AtomicInteger

@@ -96,6 +96,49 @@ class XlsxSourceSpec extends TestSpark {
     assert(e.getMessage === s"xlsx: sheet Nope not found in $fixture")
   }
 
+  test("rich-text runs join and phonetic guides are dropped, in shared " +
+       "and inline strings") {
+    import scala.jdk.CollectionConverters._
+    import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+    // XlsxWriter writes no shared strings: take its package parts and
+    // swap in a hand-written sheet and shared-strings table
+    val dir = Files.createTempDirectory("xlsx-rich").toFile
+    val base = new java.io.File(dir, "base.xlsx").getAbsolutePath
+    XlsxWriter.write(base, "Sheet1", Seq(Seq("city")))
+    val shared =
+      """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+        |<si><t>Tokyo</t><rPh sb="0" eb="5"><t>トウキョウ</t></rPh></si>
+        |<si><r><t>New </t></r><r><rPr><b/></rPr><t>York</t></r></si>
+        |</sst>""".stripMargin
+    def inline(ref: String, is: String) =
+      s"""<c r="$ref" t="inlineStr"><is>$is</is></c>"""
+    val sheet =
+      s"""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+         |<sheetData>
+         |<row r="1">${inline("A1", "<t>city</t>")}</row>
+         |<row r="2"><c r="A2" t="s"><v>0</v></c></row>
+         |<row r="3"><c r="A3" t="s"><v>1</v></c></row>
+         |<row r="4">${inline("A4", "<r><t>Hello </t></r><r><t>World</t></r>")}</row>
+         |<row r="5">${inline("A5", "<t>Osaka</t><rPh sb=\"0\" eb=\"5\"><t>オオサカ</t></rPh>")}</row>
+         |</sheetData>
+         |</worksheet>""".stripMargin
+    val p = new java.io.File(dir, "rich.xlsx").getAbsolutePath
+    val zin = new ZipFile(base)
+    val zos = new ZipOutputStream(new java.io.FileOutputStream(p))
+    def put(name: String, bytes: Array[Byte]): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(bytes); zos.closeEntry()
+    }
+    try {
+      zin.entries().asScala.filterNot(_.getName.endsWith("sheet1.xml"))
+        .foreach(e => put(e.getName, zin.getInputStream(e).readAllBytes()))
+      put("xl/worksheets/sheet1.xml", sheet.getBytes("UTF-8"))
+      put("xl/sharedStrings.xml", shared.getBytes("UTF-8"))
+    } finally { zos.close(); zin.close() }
+    val cities = spark.read.format("graft.sources.xlsx.XlsxDataSource")
+      .option("path", p).load().as[String].collect().toSeq
+    assert(cities === Seq("Tokyo", "New York", "Hello World", "Osaka"))
+  }
+
   test("a directory with no workbook fails with a named error") {
     val dir = Files.createTempDirectory("xlsx-none").toFile.getAbsolutePath
     val e = intercept[IllegalArgumentException] {
