@@ -231,8 +231,15 @@ object Bench {
 
     // JIT/codegen warm-up: run every headline plan once at the smallest
     // SF. Generated-code compilation (janino) dominates first execution
-    // (~5s for the LSH pipeline) and is amortized to zero on a real
-    // cluster; timings below measure data work.
+    // (~5s for the LSH pipeline). The warm-up does not take janino out
+    // of the samples below: the round-robin runs every other headline
+    // query between two samples of one query, and one pass over the
+    // headline set compiles more classes than the codegen cache holds
+    // (1229 at sf0.001, against the 1000 entries GraftSession.tune
+    // sets; Spark's default is 100). LRU eviction drops a query's
+    // classes before its next sample: a second pass at sf0.001
+    // recompiled 1026 of them. So timings below are data work plus most
+    // of each plan's compile.
     SparkEntry.queries.view.filterKeys(run.contains).foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
