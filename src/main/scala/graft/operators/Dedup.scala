@@ -361,7 +361,7 @@ object Dedup {
     * pass for the same one job. f=3 graphs want s=3: one job and zero
     * wasted passes vs two jobs and one wasted pass at s=2. BUT f is a
     * property of the data, not the query — the d10 graph measures f=3
-    * at sf0.1 and f=2 at sf1 (tools/CcProbe), so every gated caller
+    * at sf0.1 and f=2 at sf1 (`Probe cc`), so every gated caller
     * keeps the default 2 (never wastes on the common clique case;
     * odd-f costs one extra round-trip + checkpoint). Pass a larger s
     * only for a corpus whose f you have measured.
@@ -757,18 +757,19 @@ object Dedup {
       .select("id_a", "id_b")
     // (4) cluster; min key = corpus doc when present, else min batch id.
     // stepsPerJob=3 was TRIED here and REJECTED (round 18): the sf0.1
-    // graph measured fixpoint f=3 (tools/CcProbe: per-step changes
+    // graph measured fixpoint f=3 (`Probe cc`: per-step changes
     // 56, 5, 0 — batch docs that are dups only of other batch docs sit
     // at distance 2 from the corpus representative), where s=3
-    // converges in ONE fused job (−8 % med quiet-window A/B, AbR18
-    // d10cc3). But f is DATA-dependent, not structural: the same query
+    // converges in ONE fused job (−8 % med quiet-window A/B,
+    // 92dfbba:src/main/scala/graft/tools/AbR18.scala d10cc3). But f is
+    // DATA-dependent, not structural: the same query
     // at sf1 measures f=2 (166, 0 — no batch-batch-only dups survive
     // that subset), where the third step is a wasted pass over the
     // label table — at 100 TB a corpus-sized shuffle bought nothing.
     // The default s=2 never wastes a pass on f=2 graphs (the common
     // clique case) and caps the odd-f penalty at one extra driver
     // round-trip + checkpoint; callers who have MEASURED their
-    // corpus's f (tools/CcProbe) can pass stepsPerJob explicitly.
+    // corpus's f (`Probe cc`) can pass stepsPerJob explicitly.
     val cc = connectedComponentsAuto(pairs)
     val dropped = cc.result
       .filter(col("id") =!= col("cluster_id") && col("id") >= FLAG)

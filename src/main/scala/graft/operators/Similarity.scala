@@ -367,7 +367,7 @@ object Similarity {
     * band-bucket self-join carries (id, band, bkey) ONLY — three longs
     * a row — and the pair distinct runs AFTER cosine verification, so
     * the dedup exchange carries only pairs that already passed minCos.
-    * Ordering matters measurably (sf1, BenchOne medians): ids-only
+    * Ordering matters measurably (sf1, `Probe time` medians): ids-only
     * with distinct-before-verify shuffles the full quadratic candidate
     * set — 12.8s; embeddings carried through the band join — 5.0s
     * locally, but that shuffle widens by two orders of magnitude at
@@ -507,7 +507,8 @@ object Similarity {
     // the knnCentrality path (whose first consumer is its own edge
     // checkpoint — the d07 eagerSigs trade): a wash with a WORSE
     // median (eager 2.09 med / 1.89 min s vs lazy 2.26 / 1.75,
-    // AbR18 s06banded) — unlike d07's signature stage this one is
+    // 92dfbba:src/main/scala/graft/tools/AbR18.scala s06banded) — unlike
+    // d07's signature stage this one is
     // (id, band, bkey) rows whose build job is cheap, and the lazy
     // race re-runs the corpus scan + hyperplane signature up to 3×.
     // Eager kept for every caller.

@@ -101,7 +101,8 @@ object Vocab {
     // round-18 audit note: fusing the two training scans into ONE
     // tagged-key explode ("u "+token ∪ "b "+pair → one aggregate, two
     // top-K collects — the t17 dsirScore trick) was built and A/B'd
-    // (AbR18 "t16fuse") and REJECTED: 1.478 → 1.970 s med (+33 %,
+    // (92dfbba:src/main/scala/graft/tools/AbR18.scala "t16fuse") and
+    // REJECTED: 1.478 → 1.970 s med (+33 %,
     // identical rows). Unlike t17 — where both models share ONE key
     // space and the second model is a conditional count on the SAME
     // rows — the t16 fusion doubles the exploded row count (tokens +

@@ -2030,7 +2030,8 @@ object Pipeline {
     // aggregate combines map-side to 25 groups — no fact row is ever
     // hashed across the cluster; the only hash Exchange is the 25-row
     // final agg (PlanSpec pins scan bucketing + Exchange count).
-    // A/B at sf10 (tools/Q06Ab): pre-aggregating lineitem to order
+    // A/B at sf10 (92dfbba:src/main/scala/graft/tools/Q06Ab.scala):
+    // pre-aggregating lineitem to order
     // grain first measured ~2.9 s steady vs this form's ~2.3 s — the
     // pre-agg saves broadcast-probe work on 45M rows but its
     // HashAggregate output DROPS the bucket sort, putting a 15M-row
@@ -2497,7 +2498,8 @@ object Pipeline {
         // both sweep endpoints leave ONE read of the intervals subtree
         // (a 2-element explode) — the earlier self-union's branches
         // each re-computed the distinct+sessionize subtree (the q63
-        // duplicate-subtree trap; AbR16 at sf10: 1.76 → 1.19 s median)
+        // duplicate-subtree trap; 92dfbba:src/main/scala/graft/tools/AbR16.scala
+        // at sf10: 1.76 → 1.19 s median)
         intervals
           .select(explode(array(
             struct(col("w_lo").as("w"), lit(1L).as("d")),
@@ -3025,7 +3027,8 @@ object Pipeline {
       (s, d) => {
         // round-18 audit note: the min(struct(doc_id, source,
         // n_tokens)) aggregate respelling of this window was built,
-        // plan-dumped and A/B'd (plans/r18/q59_*, AbR18 q59agg) and
+        // plan-dumped and A/B'd (plans/r18/q59_*,
+        // 92dfbba:src/main/scala/graft/tools/AbR18.scala q59agg) and
         // REJECTED: a struct aggregation buffer is not hash-aggregable,
         // so Catalyst falls back to a non-codegen SortAggregate with a
         // Sort on BOTH sides of the fp exchange — strictly more work
@@ -3706,7 +3709,7 @@ object Pipeline {
         // distinct-pairs exchange — that exchange moved strictly
         // row-local information and was t08's largest shuffle (the
         // round-8 A/B showed caching tf couldn't pay for itself;
-        // round 9 removed the aggregation instead: sf1 BenchOne min
+        // round 9 removed the aggregation instead: sf1 `Probe time` min
         // 2.73 s → measured below).
         val toks = split(trim(lower(col("text"))), "\\s+")
         val tfm = docs.select(col("doc_id"),

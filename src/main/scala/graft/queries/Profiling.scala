@@ -173,7 +173,8 @@ object Profiling {
     // exact for any 4-decimal quantity) so 2*cum >= tot stays an exact
     // integer comparison in both engines while the hot aggregation
     // path sums longs, not 128-bit decimals — round 15 measured the
-    // decimal sums as the dominant non-scan cost (AbR15 at sf10:
+    // decimal sums as the dominant non-scan cost
+    // (92dfbba:src/main/scala/graft/tools/AbR15.scala at sf10:
     // two-pass decimal 2.12 s → two-pass long 1.66 s, and the naive
     // window spelling 3.61 s → 2.13 s from the same switch). Overflow
     // headroom: 10^11 rows × 50·10^4 ≈ 5·10^16 ≪ 2^63. The oracle

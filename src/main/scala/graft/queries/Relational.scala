@@ -439,7 +439,8 @@ object Relational {
     // (status × partition) partial (190 KB at sf10's 1.5M customers),
     // bitwise-OR merge, popcount eval — the exchange carries
     // O(groups × partitions) buffers, independent of row count, and
-    // the count is exact (oracle unchanged). tools/AbQ22 at sf10
+    // the count is exact (oracle unchanged).
+    // 92dfbba:src/main/scala/graft/tools/AbQ22.scala at sf10
     // (quiet host, median of 5): scan floor 0.41 s, generic rewrite
     // 1.12 s, bitmap 0.96 s — the bitmap wins even single-node, and
     // at cluster scale the exchange-volume gap (18 MB vs ~13M rows)
@@ -495,7 +496,8 @@ object Relational {
     // (exchange-free on the bucket distribution) and the Expand
     // operator the multi-countDistinct plan needs (4× the corpus rows
     // through the distinct aggregate) disappears. Measured at sf10:
-    // 1.27 s → 0.91 s median (AbR15), with the windows themselves
+    // 1.27 s → 0.91 s median (92dfbba:src/main/scala/graft/tools/AbR15.scala),
+    // with the windows themselves
     // ~0.17 s over the scan floor thanks to the bucket-sorted layout.
     Q("q50_funnel",
       (s, d) => {

@@ -79,7 +79,7 @@ private[xlsx] object XlsxDataSource {
     val file = conf.paths.headOption.getOrElse(
       throw new IllegalArgumentException(
         s"xlsx: no .xlsx file in directory ${conf.path}"))
-    val zip = new ZipFile(file)
+    val zip = XlsxParsing.open(file)
     try {
       val shared = XlsxParsing.sharedStrings(zip)
       val (_, sheetPath) = targetSheets(zip, conf).headOption.getOrElse(
@@ -138,7 +138,7 @@ private[xlsx] final case class XlsxScan(
 
   override def planInputPartitions(): Array[InputPartition] =
     conf.paths.flatMap { p =>
-      val zip = new ZipFile(p)
+      val zip = XlsxParsing.open(p)
       try XlsxDataSource.targetSheets(zip, conf)
         .map { case (_, sp) => XlsxInputPartition(p, sp) }
       finally zip.close()
@@ -152,7 +152,7 @@ private[xlsx] final case class XlsxScan(
     (partition: InputPartition) => {
       val part = partition.asInstanceOf[XlsxInputPartition]
       new PartitionReader[InternalRow] {
-        private val zip = new ZipFile(part.path)
+        private val zip = XlsxParsing.open(part.path)
         private val it = {
           val base = XlsxParsing.rows(zip, part.sheetPath,
             XlsxParsing.sharedStrings(zip))

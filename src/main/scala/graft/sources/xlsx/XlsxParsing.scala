@@ -23,11 +23,29 @@ object XlsxParsing {
     f.createXMLStreamReader(in)
   }
 
+  /** Open a workbook's zip container; a file that is not a zip fails
+    * with an error that names it. */
+  private[xlsx] def open(path: String): ZipFile =
+    try new ZipFile(path)
+    catch { case e: java.util.zip.ZipException =>
+      throw new IllegalArgumentException(
+        s"xlsx: $path is not a zip archive (${e.getMessage})", e) }
+
+  /** The stream of a required part; a missing part fails with an error
+    * that names the file and the part. */
+  private def part(zip: ZipFile, name: String): InputStream = {
+    val entry = zip.getEntry(name)
+    if (entry == null) throw new IllegalArgumentException(
+      s"xlsx: ${zip.getName} has no part $name")
+    zip.getInputStream(entry)
+  }
+
   /** Sheet name → worksheet zip entry, resolving workbook.xml sheet ids
     * through the relationships part. */
   def sheetEntries(zip: ZipFile): Seq[(String, String)] = {
-    val rels = {
-      val entry = zip.getEntry("xl/_rels/workbook.xml.rels")
+    // no relationships part: every sheet falls back to sheet1.xml below
+    val rels = Option(zip.getEntry("xl/_rels/workbook.xml.rels")).fold(
+        Map.empty[String, String]) { entry =>
       val r = xmlReader(zip.getInputStream(entry))
       val m = scala.collection.mutable.Map[String, String]()
       while (r.hasNext) {
@@ -39,7 +57,7 @@ object XlsxParsing {
       r.close(); m.toMap
     }
     val out = ArrayBuffer[(String, String)]()
-    val r = xmlReader(zip.getInputStream(zip.getEntry("xl/workbook.xml")))
+    val r = xmlReader(part(zip, "xl/workbook.xml"))
     while (r.hasNext) {
       if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "sheet") {
         val name = r.getAttributeValue(null, "name")
@@ -100,7 +118,7 @@ object XlsxParsing {
     * Caller closes over the iterator fully before closing the zip. */
   def rows(zip: ZipFile, sheetPath: String,
            shared: IndexedSeq[String]): Iterator[Map[Int, Cell]] = {
-    val r = xmlReader(zip.getInputStream(zip.getEntry(sheetPath)))
+    val r = xmlReader(part(zip, sheetPath))
     new Iterator[Map[Int, Cell]] {
       private var nextRow: Map[Int, Cell] = _
       private var done = false

@@ -147,4 +147,52 @@ class XlsxSourceSpec extends TestSpark {
     }
     assert(e.getMessage.contains(dir), e.getMessage)
   }
+
+  /** A copy of a one-column XlsxWriter workbook without the parts
+    * `drop` selects, written inside a fresh temp directory. */
+  private def workbookWithout(drop: String => Boolean): String = {
+    import scala.jdk.CollectionConverters._
+    import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+    val dir = Files.createTempDirectory("xlsx-broken").toFile
+    val base = new java.io.File(dir, "base.xlsx").getAbsolutePath
+    XlsxWriter.write(base, "Sheet1", Seq(Seq("city"), Seq("Oslo")))
+    val p = new java.io.File(dir, "broken.xlsx").getAbsolutePath
+    val zin = new ZipFile(base)
+    val zos = new ZipOutputStream(new java.io.FileOutputStream(p))
+    try zin.entries().asScala.filterNot(e => drop(e.getName)).foreach { e =>
+      zos.putNextEntry(new ZipEntry(e.getName))
+      zos.write(zin.getInputStream(e).readAllBytes()); zos.closeEntry()
+    } finally { zos.close(); zin.close() }
+    p
+  }
+
+  private def loadError(path: String): IllegalArgumentException =
+    intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.xlsx.XlsxDataSource")
+        .option("path", path).load()
+    }
+
+  test("a zip with no workbook part fails with an error naming file and part") {
+    val p = workbookWithout(_ == "xl/workbook.xml")
+    assert(loadError(p).getMessage === s"xlsx: $p has no part xl/workbook.xml")
+  }
+
+  test("a worksheet part the relationships name but the zip lacks fails by name") {
+    val p = workbookWithout(_ == "xl/worksheets/sheet1.xml")
+    assert(loadError(p).getMessage ===
+      s"xlsx: $p has no part xl/worksheets/sheet1.xml")
+  }
+
+  test("a file that is not a zip fails with an error that names it") {
+    val p = Files.createTempFile("xlsx-not-zip", ".xlsx")
+    Files.write(p, "service_name,count\nsearch,1\n".getBytes("UTF-8"))
+    val e = loadError(p.toString)
+    assert(e.getMessage.startsWith(s"xlsx: $p is not a zip archive"), e.getMessage)
+  }
+
+  test("a workbook without relationships reads its first sheet from sheet1.xml") {
+    val p = workbookWithout(_ == "xl/_rels/workbook.xml.rels")
+    assert(spark.read.format("graft.sources.xlsx.XlsxDataSource")
+      .option("path", p).load().as[String].collect().toSeq === Seq("Oslo"))
+  }
 }

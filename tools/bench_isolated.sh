@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Dev-only: collect ISOLATED per-query medians (fresh pinned-heap JVM
-# per query — graft.tools.BenchOne) for the sf10 bench rows, so the
+# per query — graft.tools.Probe time) for the sf10 bench rows, so the
 # committed artifact carries both protocols: the uniform suite-context
 # pair (BENCH_sf10.json, same-window vs DuckDB) AND the isolated
 # medians cross-round row comparisons need (suite-context rows for
@@ -23,7 +23,7 @@ echo "{" > "$OUT.tmp"
 first=1
 for q in "${QUERIES[@]}"; do
   line=$(SPARK_GRAFT_SF_DIR="$SF" "$REPO/tools/run_main.sh" \
-    graft.tools.BenchOne "$q" "$ITERS" 2>/dev/null | grep "median=" || true)
+    graft.tools.Probe time "$q" "$ITERS" 2>/dev/null | grep "median=" || true)
   med=$(echo "$line" | sed -n 's/.*median=\([0-9.]*\).*/\1/p')
   mn=$(echo "$line" | sed -n 's/.*samples=\([0-9.,]*\) .*/\1/p' \
     | tr ',' '\n' | sort -g | head -1)
