@@ -131,7 +131,8 @@ object Bench {
     "q65_bucketed_join",
     // round-13: the full 5-way star over the same layouts — the
     // facts merge-join co-bucketed on orderkey, dims broadcast (the
-    // pre-aggregate spelling was A/B-rejected in tools/Q06Ab; q06
+    // pre-aggregate spelling was A/B-rejected in
+    // 92dfbba:src/main/scala/graft/tools/Q06Ab.scala; q06
     // stays as the raw-parquet baseline, measured side-by-side)
     "q06b_multijoin_bucketed",
     // round-10: k-means model training (Lloyd scans shrink map-side
