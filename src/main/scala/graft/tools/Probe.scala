@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
@@ -11,20 +12,13 @@ import graft.operators.{Dedup, Staged}
 
 /** Dev probes over the gated queries of `SparkEntry.queries`, each run
   * against the noop sink. Dev-only, not part of the shipped library.
-  *
-  * {{{
-  * Probe time <query> [iters] [conf=k:v ...]
-  * Probe ab   <query> <confKey> <a> <b> [pairs]
-  * Probe plan <query> [fmt=formatted] [all=true] [conf=k:v ...]
-  * Probe jobs [query] [samples]
-  * Probe cc
-  * }}}
+  * The modes (their arguments are in `Usage`):
   *  - `time`: every sample plus the median, on one line that
   *    `tools/bench_isolated.sh` parses, so a per-query regression can be
   *    told from hypervisor steal.
   *  - `ab`: an INTERLEAVED same-JVM A/B of a runtime SQLConf (sample A,
-  *    sample B, sample A, ...), so a host steal wave (this VM: 4-20 % in
-  *    bursts of minutes) lands on both arms instead of poisoning
+  *    sample B, sample A, ...), so a host steal wave (4-20 % in bursts
+  *    of minutes, SURVEY §6) lands on both arms instead of poisoning
   *    whichever arm ran in its window (one sequential d07 SMJ-vs-SHJ
   *    comparison read 29.9 s vs 3.7 s when the quiet-window truth was
   *    2.5 vs 3.1 the OTHER way). A code-variant A/B is `time` run
@@ -76,13 +70,13 @@ object Probe {
           sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
             "/root/testdata/sf0.1")): Unit = {
     val (mode, pos, confs) = parse(args)
-    def flag(f: String) = args.contains(f)
     withConfs(spark, confs) {
       mode match {
         case "time" => time(spark, pos(0), pos.lift(1).fold(5)(_.toInt), sfDir)
         case "ab"   => ab(spark, pos(0), pos(1), pos(2), pos(3),
                           pos.lift(4).fold(4)(_.toInt), sfDir)
-        case "plan" => plan(spark, pos(0), flag("fmt=formatted"), flag("all=true"), sfDir)
+        case "plan" => plan(spark, pos(0), args.contains("fmt=formatted"),
+                            args.contains("all=true"), sfDir)
         case "jobs" => jobs(spark, pos.headOption.getOrElse("d07_dedup_corpus"),
                             pos.lift(1).fold(2)(_.toInt), sfDir)
         case "cc"   => cc(spark, sfDir)
@@ -141,7 +135,7 @@ object Probe {
   /** Codegen warm-up at the smallest SF; a failure here is not a probe
     * result. */
   private def warm(spark: SparkSession, fn: Query): Unit =
-    try noop(fn(spark, WarmDir)) catch { case _: Throwable => }
+    try noop(fn(spark, WarmDir)) catch { case NonFatal(_) => }
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

@@ -98,13 +98,8 @@ class XlsxSourceSpec extends TestSpark {
 
   test("rich-text runs join and phonetic guides are dropped, in shared " +
        "and inline strings") {
-    import scala.jdk.CollectionConverters._
-    import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
     // XlsxWriter writes no shared strings: take its package parts and
     // swap in a hand-written sheet and shared-strings table
-    val dir = Files.createTempDirectory("xlsx-rich").toFile
-    val base = new java.io.File(dir, "base.xlsx").getAbsolutePath
-    XlsxWriter.write(base, "Sheet1", Seq(Seq("city")))
     val shared =
       """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
         |<si><t>Tokyo</t><rPh sb="0" eb="5"><t>トウキョウ</t></rPh></si>
@@ -122,18 +117,8 @@ class XlsxSourceSpec extends TestSpark {
          |<row r="5">${inline("A5", "<t>Osaka</t><rPh sb=\"0\" eb=\"5\"><t>オオサカ</t></rPh>")}</row>
          |</sheetData>
          |</worksheet>""".stripMargin
-    val p = new java.io.File(dir, "rich.xlsx").getAbsolutePath
-    val zin = new ZipFile(base)
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(p))
-    def put(name: String, bytes: Array[Byte]): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(bytes); zos.closeEntry()
-    }
-    try {
-      zin.entries().asScala.filterNot(_.getName.endsWith("sheet1.xml"))
-        .foreach(e => put(e.getName, zin.getInputStream(e).readAllBytes()))
-      put("xl/worksheets/sheet1.xml", sheet.getBytes("UTF-8"))
-      put("xl/sharedStrings.xml", shared.getBytes("UTF-8"))
-    } finally { zos.close(); zin.close() }
+    val p = rewritten(_.endsWith("sheet1.xml"), Map(
+      "xl/worksheets/sheet1.xml" -> sheet, "xl/sharedStrings.xml" -> shared))
     val cities = spark.read.format("graft.sources.xlsx.XlsxDataSource")
       .option("path", p).load().as[String].collect().toSeq
     assert(cities === Seq("Tokyo", "New York", "Hello World", "Osaka"))
@@ -148,20 +133,26 @@ class XlsxSourceSpec extends TestSpark {
     assert(e.getMessage.contains(dir), e.getMessage)
   }
 
-  /** A copy of a one-column XlsxWriter workbook without the parts
-    * `drop` selects, written inside a fresh temp directory. */
-  private def workbookWithout(drop: String => Boolean): String = {
+  /** A copy of a one-column XlsxWriter workbook (`city`: `Oslo`)
+    * without the parts `drop` selects and with the parts in `put`,
+    * written inside a fresh temp directory. */
+  private def rewritten(drop: String => Boolean,
+                        put: Map[String, String] = Map.empty): String = {
     import scala.jdk.CollectionConverters._
     import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
-    val dir = Files.createTempDirectory("xlsx-broken").toFile
+    val dir = Files.createTempDirectory("xlsx-parts").toFile
     val base = new java.io.File(dir, "base.xlsx").getAbsolutePath
     XlsxWriter.write(base, "Sheet1", Seq(Seq("city"), Seq("Oslo")))
-    val p = new java.io.File(dir, "broken.xlsx").getAbsolutePath
+    val p = new java.io.File(dir, "parts.xlsx").getAbsolutePath
     val zin = new ZipFile(base)
     val zos = new ZipOutputStream(new java.io.FileOutputStream(p))
-    try zin.entries().asScala.filterNot(e => drop(e.getName)).foreach { e =>
-      zos.putNextEntry(new ZipEntry(e.getName))
-      zos.write(zin.getInputStream(e).readAllBytes()); zos.closeEntry()
+    def write(name: String, bytes: Array[Byte]): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(bytes); zos.closeEntry()
+    }
+    try {
+      zin.entries().asScala.filterNot(e => drop(e.getName))
+        .foreach(e => write(e.getName, zin.getInputStream(e).readAllBytes()))
+      put.foreach { case (name, xml) => write(name, xml.getBytes("UTF-8")) }
     } finally { zos.close(); zin.close() }
     p
   }
@@ -173,12 +164,12 @@ class XlsxSourceSpec extends TestSpark {
     }
 
   test("a zip with no workbook part fails with an error naming file and part") {
-    val p = workbookWithout(_ == "xl/workbook.xml")
+    val p = rewritten(_ == "xl/workbook.xml")
     assert(loadError(p).getMessage === s"xlsx: $p has no part xl/workbook.xml")
   }
 
   test("a worksheet part the relationships name but the zip lacks fails by name") {
-    val p = workbookWithout(_ == "xl/worksheets/sheet1.xml")
+    val p = rewritten(_ == "xl/worksheets/sheet1.xml")
     assert(loadError(p).getMessage ===
       s"xlsx: $p has no part xl/worksheets/sheet1.xml")
   }
@@ -191,7 +182,7 @@ class XlsxSourceSpec extends TestSpark {
   }
 
   test("a workbook without relationships reads its first sheet from sheet1.xml") {
-    val p = workbookWithout(_ == "xl/_rels/workbook.xml.rels")
+    val p = rewritten(_ == "xl/_rels/workbook.xml.rels")
     assert(spark.read.format("graft.sources.xlsx.XlsxDataSource")
       .option("path", p).load().as[String].collect().toSeq === Seq("Oslo"))
   }
