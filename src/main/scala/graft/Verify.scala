@@ -21,14 +21,13 @@ object Verify {
       .filter(_.nonEmpty) // set-but-empty means "all", not "none"
     val selected = only.fold(SparkEntry.queries)(
       names => SparkEntry.queries.filter { case (n, _) => names(n) })
+    // each query is a staging scope: its stages are freed when it ends
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.operators.Staging.scope(fn(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop persisted operator stages between queries
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -14,27 +14,16 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** A lazily-built result plus the persisted intermediate stages it
-    * reads. Stages stay cached until [[cleanup]] so the result can be
-    * materialized first; long-lived sessions should call `cleanup()`
-    * once done — for `persist()`ed stages `spark.catalog.clearCache()`
-    * also works, but CHECKPOINT-backed stages (connected components'
-    * labels) live in the block manager where neither clearCache nor
-    * cache LRU eviction reaches them; only cleanup() (or eventual
-    * driver GC via the ContextCleaner) frees those. The convenience
-    * overloads returning a bare DataFrame are fine for one-shot jobs;
-    * a long-lived session running pipelines in a loop should use the
-    * Staged variants and clean up. */
+  /** A lazily-built result plus the [[Staging]] stages it reads. The
+    * stages live until the enclosing [[Staging.scope]] ends (graft's
+    * sinks and REPL statements open one), so the result can be
+    * materialized first; [[cleanup]] frees them sooner. A
+    * checkpoint-backed stage (connected components' labels) cannot be
+    * recomputed once freed, so act on `result` before calling cleanup().
+    * The overloads returning a bare DataFrame leave the stages to the
+    * scope. */
   final case class Staged(result: DataFrame, stages: Seq[DataFrame]) {
-    def cleanup(): Unit = stages.foreach { s =>
-      s.unpersist(blocking = false)
-      // checkpoint-backed stages (connected components' labels) live in
-      // the block manager, not the CacheManager — free those too. Note
-      // that unlike persist()ed stages, a checkpoint-backed stage is NOT
-      // recomputable after cleanup (its lineage is truncated), so
-      // materialize/write `result` before calling cleanup().
-      org.apache.spark.sql.GraftInternal.unpersistBackingRdd(s)
-    }
+    def cleanup(): Unit = stages.foreach(Staging.free)
   }
 
   /** Exact dedup: keep one representative row per distinct key (min of
@@ -137,7 +126,7 @@ object Dedup {
       raw.withColumn("__df", count(lit(1)).over(w))
         .filter(col("__df") <= cap).drop("__df")
     }
-    val toks = capped.cache()
+    val toks = Staging.persist(capped, eager = false)
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("sz"))
     val pairs = toks.as("a").join(toks.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
@@ -201,15 +190,10 @@ object Dedup {
     *
     * EAGER-EXECUTION NOTE (round 17): with the default
     * `eagerSigs = true` the signature stage is materialized by a
-    * count() action AT BUILD TIME (autoFreeEager),
-    * so this is no longer a plan-only builder — calling it runs the
-    * signature pass immediately, and the stage's free is keyed to the
-    * NEXT execution end. The intended contract is build-then-consume-
-    * immediately (what every gated caller does): any execution that
-    * lands between this call and the action consuming `.result` —
-    * including ordinary serial REPL queries — spends the stage's
-    * grace and frees it, after which consumers recompute the subtree
-    * (correct, deterministic, up to 4× slower). Plan-only callers
+    * count() action AT BUILD TIME ([[Staging.persist]] eager), so this
+    * is no longer a plan-only builder — calling it runs the signature
+    * pass immediately. The stage lives until the enclosing
+    * [[Staging.scope]] ends (or [[Staged.cleanup]]); plan-only callers
     * (explain/compose-later) should expect the build job.
     *
     * `maxBucketSize`: an LSH bucket holding k docs emits k² candidate
@@ -228,23 +212,21 @@ object Dedup {
     // Computing string shingles inside all 64 permutation expressions
     // would re-evaluate the tokenizer 64×/row once the giant tree falls
     // out of whole-stage codegen; after this projection each permutation
-    // is pure long arithmetic. persist() cuts the tree so the self-join
+    // is pure long arithmetic. Staging cuts the tree so the self-join
     // reads the signatures instead of recomputing them per side (the
     // 100 TB equivalent is staging signatures to a parquet table).
     val hExpr = hashedShingles(text)
     // One EAGERLY materialized stage holds (h, sig); the band keys and
     // the join read it from storage instead of re-deriving signatures
     // (the 100 TB equivalent is staging signatures to a parquet
-    // table). Eager (autoFreeEager), not a lazy persist: the band
+    // table). Eager ([[Staging.persist]]), not a lazy persist: the band
     // self-join's two map stages and the two verify-side joins all hit
     // a COLD cache under the first action (the kmvSetOps race) —
     // measured on d03 at sf0.1 (interleaved same-JVM A/B, identical
     // rows): lazy 1.60 med / 1.38 min s vs eager 1.30 / 1.26. The one
     // build job IS the pipeline's signature pass; downstream stages
-    // read warm blocks, and the action that consumes the returned
-    // plan frees them (the round-16 lifecycle — a REPL loop no longer
-    // accumulates signature caches either, which the old plain
-    // persist() did until clearCache).
+    // read warm blocks, and the enclosing scope frees them once the
+    // action that consumes the returned plan is done.
     //
     // `eagerSigs = false` (round 18): when the caller's FIRST consumer
     // is itself a blocking materialization — dedupCorpus's CC edge
@@ -262,9 +244,7 @@ object Dedup {
       .select(col("id"), col("h"),
         graft.functions.MinHashFunctions
           .minhashSig(col("h"), bands * rowsPerBand, seed).as("sig"))
-    val sigs =
-      if (eagerSigs) graft.operators.Staged.autoFreeEager(sigs0)
-      else graft.operators.Staged.autoFree(sigs0)
+    val sigs = Staging.persist(sigs0, eager = eagerSigs)
     val bandCols = (0 until bands).map { b =>
       val bandSig = concat_ws("_",
         (0 until rowsPerBand).map(r =>
@@ -399,13 +379,12 @@ object Dedup {
     // (band self-join + exact verify under d07/d10, the hamming join
     // under m06) inside the checkpoint job; explode(array) emits the
     // same two rows per pair in a single pass over `pairs`.
-    val edges = graft.operators.Staged.checkpointStage(pairs
+    val edges = Staging.checkpoint(pairs
       .select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")),
       eager = true)
-    val freeRdd = org.apache.spark.sql.GraftInternal.unpersistBackingRdd _
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
     val lblType = labels.schema("lbl").dataType
@@ -426,7 +405,7 @@ object Dedup {
               .select(edges("src").as("id"), col("lbl")))
             .groupBy("id").agg(min("lbl").as("lbl"))
         // the round's LAST step carries its input label in `o`
-        val next = graft.operators.Staged.checkpointStage(cur
+        val next = Staging.checkpoint(cur
           .select(col("id"), col("lbl"), col("lbl").as("o"))
           .unionAll(edges.join(cur, edges("dst") === cur("id"))
             .select(edges("src").as("id"), col("lbl"),
@@ -444,7 +423,7 @@ object Dedup {
           .first().getLong(0)
         inFlight = null
         converged = changed == 0L
-        if (prevRound != null) freeRdd(prevRound)
+        if (prevRound != null) Staging.free(prevRound)
         prevRound = next
         labels = next
         i += stepsPerJob
@@ -458,12 +437,10 @@ object Dedup {
       case e: Throwable =>
         // don't leak blocks on failure — including the failed round's
         // partially checkpointed partitions
-        if (inFlight != null) freeRdd(inFlight)
-        if (prevRound != null) freeRdd(prevRound)
-        freeRdd(edges)
+        Seq(inFlight, prevRound, edges).filter(_ != null).foreach(Staging.free)
         throw e
     }
-    freeRdd(edges)
+    Staging.free(edges)
     Staged(labels.select(col("id"), col("lbl").as("cluster_id")), Seq(labels))
   }
 
@@ -524,7 +501,6 @@ object Dedup {
     * [[connectedComponents]], proven equivalent in DedupSpec. */
   def connectedComponentsTwoPhase(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIters: Int = 30): Staged = {
-    val freeRdd = org.apache.spark.sql.GraftInternal.unpersistBackingRdd _
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       val w = Window.partitionBy("u")
@@ -550,7 +526,7 @@ object Dedup {
           .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
       (r.getLong(0), r.getDecimal(1))
     }
-    var edges = graft.operators.Staged.checkpointStage(
+    var edges = Staging.checkpoint(
       pairs.select(col(idA).as("u"), col(idB).as("v"))
         .filter(col("u") =!= col("v")).distinct(), eager = true)
     var sig = signature(edges)
@@ -560,12 +536,12 @@ object Dedup {
     try {
       while (!converged && i < maxIters) {
         val next =
-          graft.operators.Staged.checkpointStage(smallStar(largeStar(edges)), eager = false)
+          Staging.checkpoint(smallStar(largeStar(edges)), eager = false)
         inFlight = next
         val nsig = signature(next) // materializes the lazy checkpoint
         inFlight = null
         converged = nsig == sig
-        freeRdd(edges)
+        Staging.free(edges)
         edges = next
         sig = nsig
         i += 1
@@ -576,8 +552,7 @@ object Dedup {
             "iterations — pathological input; raise maxIters")
     } catch {
       case e: Throwable =>
-        if (inFlight != null) freeRdd(inFlight)
-        freeRdd(edges)
+        Seq(inFlight, edges).filter(_ != null).foreach(Staging.free)
         throw e
     }
     // fixpoint edges are stars: every node points straight at its
@@ -622,9 +597,9 @@ object Dedup {
                   seed: Long = 42L,
                   maxBucketSize: Option[Long] = None,
                   twoPhaseCc: Boolean = false): Staged = {
-    // persisted: read by the signature stage AND the final anti-join
+    // staged: read by the signature stage AND the final anti-join
     // (at 100 TB: a parquet stage table)
-    val survivors = exact(df, md5(text), id).persist()
+    val survivors = Staging.persist(exact(df, md5(text), id), eager = false)
     // eagerSigs = false: the first consumer is the CC edge checkpoint,
     // a blocking job of its own — see the A/B note in
     // [[minhashLshPairsStaged]] (d07 −19 % med)
@@ -680,7 +655,7 @@ object Dedup {
     * [0, 2^62)) throws from THIS call — during the edge-checkpoint
     * job that first evaluates the keyed union — not from the first
     * action on `.result`. The signature stage itself is a LAZY
-    * autoFree persist (round 18; see [[minhashLshPairsStaged]]'s
+    * [[Staging.persist]] (round 18; see [[minhashLshPairsStaged]]'s
     * eagerSigs note), materialized by that same checkpoint job. */
   def incrementalDedupStaged(corpus: DataFrame, corpusId: Column,
       corpusText: Column, batch: DataFrame, batchId: Column,
@@ -701,8 +676,10 @@ object Dedup {
     // exists in the corpus (one hash semi-join, no text comparison)
     val b1 = exact(batch, md5(batchText), batchId)
     val corpusHashes = corpus.select(md5(corpusText).as("__ch")).distinct()
-    val b2 = b1.join(corpusHashes, md5(batchText) === col("__ch"), "left_anti")
-      .persist() // read by the signature stage AND the final anti-join
+    // staged: read by the signature stage AND the final anti-join
+    val b2 = Staging.persist(
+      b1.join(corpusHashes, md5(batchText) === col("__ch"), "left_anti"),
+      eager = false)
     // (2) signatures over corpus + surviving batch in one keyed space
     val keyed = corpus.select(
         checkedId(corpusId.cast("long"), "corpus").as("kid"),
@@ -716,12 +693,13 @@ object Dedup {
     // here is a whole extra corpus pass (the d07 A/B: eager 2.46 med
     // vs lazy 2.00, identical rows). b2's persisted cache lands in
     // the same checkpoint job.
-    val sigs = graft.operators.Staged.autoFree(keyed
+    val sigs = Staging.persist(keyed
       .select(col("kid").as("id"), hashedShingles(col("ktext")).as("h"))
       .filter(size(col("h")) > 0)
       .select(col("id"), col("h"),
         graft.functions.MinHashFunctions
-          .minhashSig(col("h"), bands * rowsPerBand, seed).as("sig")))
+          .minhashSig(col("h"), bands * rowsPerBand, seed).as("sig")),
+      eager = false)
     val bandCols = (0 until bands).map { b =>
       val bandSig = concat_ws("_",
         (0 until rowsPerBand).map(r =>
@@ -895,12 +873,12 @@ object Dedup {
     * caller-owned cache cleanup. */
   def simhashPairsStaged(df: DataFrame, id: Column, text: Column,
                    maxDist: Int = 3): Staged = {
-    // persist the hash stage BEFORE deriving fp: Catalyst collapses
+    // stage the hashes BEFORE deriving fp: Catalyst collapses
     // adjacent projections, which would re-inline the tokenizer into
     // all 64 per-bit vote expressions.
-    val hashed = df
-      .select(id.as("id"), hashedShingles(text, modP = false).as("hs"))
-      .persist()
+    val hashed = Staging.persist(df
+      .select(id.as("id"), hashedShingles(text, modP = false).as("hs")),
+      eager = false)
     val withFp = hashed.select(col("id"), simhashFromHashes(col("hs")).as("fp"))
     Staged(hamming64Pairs(withFp, maxDist), Seq(hashed))
   }

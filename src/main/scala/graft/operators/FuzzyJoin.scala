@@ -55,7 +55,7 @@ object FuzzyJoin {
     // gate run). Callers who want lazy control over the stage use
     // editDistance1PairsStaged + cleanup() themselves.
     val staged = editDistance1PairsStaged(df, id, str, maxBucket)
-    val out = Staged.checkpointStage(staged.result, eager = true)
+    val out = Staging.checkpoint(staged.result, eager = true)
     staged.cleanup()
     out
   }
@@ -91,12 +91,12 @@ object FuzzyJoin {
     // injectivity (a collision straddling the cap boundary could at
     // worst drop a bucket early — the same recall trade the cap
     // itself makes, at ~2⁻⁶⁴ odds per variant pair).
-    val vars = base.select(col("id"), col("s"),
+    val vars = Staging.persist(base.select(col("id"), col("s"),
       explode(array_distinct(concat(array(col("s")),
         expr("transform(sequence(1, length(s)), " +
           "i -> concat(substr(s, 1, i-1), substr(s, i+1)))")))).as("v"))
-      .select(col("id"), col("s"), xxhash64(col("v")).as("vh"))
-      .persist()
+      .select(col("id"), col("s"), xxhash64(col("v")).as("vh")),
+      eager = false)
     val capped = maxBucket.fold(vars) { cap =>
       val hot = vars.groupBy("vh").agg(count(lit(1)).as("__n"))
         .filter(col("__n") > cap).select("vh")

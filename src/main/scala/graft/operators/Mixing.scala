@@ -83,15 +83,14 @@ object Mixing {
     // count shuffle (the round-14 plan audit showed two extra
     // documents scans). Staging is the d19/knnCentrality discipline:
     // |domains| rows, built once (measured at sf10: 1.31 s → 0.97 s
-    // median for d15). EAGERLY materialized (autoFreeEager,
-    // round-17): `tot` and `caps` are two concurrently-launched
-    // broadcast jobs racing on the cold lazy cache — the same shape
-    // A/B'd at q63 (−37 % med), q55 (−13 %) and q53 (−15 %); the
-    // consuming action's end frees the blocks as before (round-16
-    // lifecycle).
-    val cnt = Staged.autoFreeEager(
+    // median for d15). EAGERLY materialized (round-17): `tot` and
+    // `caps` are two concurrently-launched broadcast jobs racing on the
+    // cold lazy cache — the same shape A/B'd at q63 (−37 % med), q55
+    // (−13 %) and q53 (−15 %).
+    val cnt = Staging.persist(
       docs.groupBy(domainCol).agg(count(lit(1)).as("c_docs"))
-        .withColumn("w", floor(sqrt(col("c_docs"))).cast("long")))
+        .withColumn("w", floor(sqrt(col("c_docs"))).cast("long")),
+      eager = true)
     val tot = cnt.agg(sum("w").as("sum_w"), sum("c_docs").as("c_total"))
     val caps = cnt.crossJoin(broadcast(tot))
       .withColumn("cap",

@@ -80,7 +80,7 @@ object Quantiles {
     // the corpus twice — A/B'd at sf10, see the q62 entry. At 100 TB
     // the equivalent is staging the 2-column projection to parquet.
     val v0 = df.withColumn("__v", value)
-    val v = if (stageScores) Staged.checkpointStage(v0, eager = true) else v0
+    val v = if (stageScores) Staging.checkpoint(v0, eager = true) else v0
     val hist = v.groupBy("__v").agg(count(lit(1)).as("__c"))
     val wCum = Window.orderBy(col("__v").desc)
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -403,13 +403,11 @@ object Similarity {
     // AND both anti-joined self-join sides, whose exchanges differ —
     // ReuseExchange can't dedup them, so unstaged the corpus scan +
     // hyperplane signature ran up to 4× (round-15 ADVICE). EAGERLY
-    // materialized (autoFreeEager, round-17): the hot agg and the
-    // anti-join's left map stage race on the cold lazy cache (A/B'd
-    // under s05's knnJoin twin: −6% med, identical rows); the
-    // round-16 lifecycle holds — the consuming action's end frees
-    // the blocks.
+    // materialized (round-17): the hot agg and the anti-join's left
+    // map stage race on the cold lazy cache (A/B'd under s05's knnJoin
+    // twin: −6% med, identical rows).
     val banded = maxBucketSize.fold(banded0) { cap =>
-      val staged = Staged.autoFreeEager(banded0)
+      val staged = Staging.persist(banded0, eager = true)
       val hot = staged.groupBy("band", "bkey")
         .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
         .select("band", "bkey")
@@ -499,21 +497,19 @@ object Similarity {
     // Staged like nearDupPairs: capped, banded0 feeds the hot agg and
     // both self-join sides with differing exchanges (no reuse) — the
     // staging collapses up to 4 signature computes to one. EAGERLY
-    // materialized (autoFreeEager): the hot agg and the anti-join's
-    // left map stage race on the cold lazy cache (round-17 A/B,
-    // identical rows: lazy 1.35 med / 1.24 min s vs eager 1.26 / 1.19
-    // at sf0.1); the consuming action's end frees the blocks (the
-    // round-16 lifecycle). Round 18 re-tested LAZY staging here for
-    // the knnCentrality path (whose first consumer is its own edge
-    // checkpoint — the d07 eagerSigs trade): a wash with a WORSE
-    // median (eager 2.09 med / 1.89 min s vs lazy 2.26 / 1.75,
-    // 92dfbba:src/main/scala/graft/tools/AbR18.scala s06banded) — unlike
-    // d07's signature stage this one is
-    // (id, band, bkey) rows whose build job is cheap, and the lazy
-    // race re-runs the corpus scan + hyperplane signature up to 3×.
-    // Eager kept for every caller.
+    // materialized: the hot agg and the anti-join's left map stage
+    // race on the cold lazy cache (round-17 A/B, identical rows: lazy
+    // 1.35 med / 1.24 min s vs eager 1.26 / 1.19 at sf0.1). Round 18
+    // re-tested LAZY staging here for the knnCentrality path (whose
+    // first consumer is its own edge checkpoint — the d07 eagerSigs
+    // trade): a wash with a WORSE median (eager 2.09 med / 1.89 min s
+    // vs lazy 2.26 / 1.75, 92dfbba:src/main/scala/graft/tools/AbR18.scala
+    // s06banded) — unlike d07's signature stage this one is (id, band,
+    // bkey) rows whose build job is cheap, and the lazy race re-runs
+    // the corpus scan + hyperplane signature up to 3×. Eager kept for
+    // every caller.
     val banded = maxBucketSize.fold(banded0) { cap =>
-      val staged = Staged.autoFreeEager(banded0)
+      val staged = Staging.persist(banded0, eager = true)
       val hot = staged.groupBy("band", "bkey")
         .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
         .select("band", "bkey")
@@ -603,7 +599,7 @@ object Similarity {
     // deterministically before returning: the result plan references
     // only the nodes-sized mass blocks, so nothing corpus-scaled
     // outlives the call.
-    val edges = Staged.checkpointStage(
+    val edges = Staging.checkpoint(
       knnJoin(corpus, k, nBits, bands, maxBucketSize)
         .select(col("query_id").as("src"), col("vec_id").as("dst"),
           count(lit(1)).over(Window.partitionBy("query_id")).as("deg")),
@@ -628,10 +624,10 @@ object Similarity {
         .select(col("dst").as("vec_id"), expr("mass div deg").as("c"))
         .groupBy("vec_id").agg(sum(col("c")).as("inm"))
     }
-    val inmMat = Staged.checkpointStage(inm, eager = true)
+    val inmMat = Staging.checkpoint(inm, eager = true)
     // the loop is fully materialized in `inmMat` — free the corpus-
     // scaled edge blocks now, inside the operator (the CC discipline)
-    org.apache.spark.sql.GraftInternal.unpersistBackingRdd(edges)
+    Staging.free(edges)
     nodes.join(inmMat, Seq("vec_id"), "left")
       .select(col("vec_id"),
         expr("150000L + (850 * coalesce(inm, 0L)) div 1000").as("mass"))
@@ -669,14 +665,13 @@ object Similarity {
     // self-join AND the anti-join's left side — unstaged, the
     // assignment scan (nearestCells argmax over every corpus row) ran
     // 3×, and ReuseExchange cannot dedup the differently-keyed
-    // consumers. EAGERLY materialized (autoFreeEager) rather than
-    // lazily: the self-join's two map stages race on the cold cache
-    // (round-17 interleaved A/B, identical rows: lazy 1.22 med / 1.01
-    // min s vs eager 1.06 / 0.94 at sf0.1); the consuming action's
-    // end frees the blocks (the round-16 lifecycle).
-    val cells = Staged.autoFreeEager(assignCells(corpus, centroids, 1)
+    // consumers. EAGERLY materialized rather than lazily: the
+    // self-join's two map stages race on the cold cache (round-17
+    // interleaved A/B, identical rows: lazy 1.22 med / 1.01 min s vs
+    // eager 1.06 / 0.94 at sf0.1).
+    val cells = Staging.persist(assignCells(corpus, centroids, 1)
       .select(col("vec_id"), col("embedding"),
-        element_at(col("cells"), 1).as("cell_id")))
+        element_at(col("cells"), 1).as("cell_id")), eager = true)
     val drops = cells.as("a").join(cells.as("b"),
         col("a.cell_id") === col("b.cell_id") &&
         col("a.vec_id") < col("b.vec_id"))

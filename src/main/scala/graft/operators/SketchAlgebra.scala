@@ -82,7 +82,7 @@ object SketchAlgebra {
     * |groups|·k rows — KBs — and its one build job IS the query's
     * corpus pass. */
   def kmvSetOpsStaged(skIn: DataFrame, k: Int): Dedup.Staged = {
-    val sk = Staged.checkpointStage(skIn, eager = true)
+    val sk = Staging.checkpoint(skIn, eager = true)
     val groups = sk.select(col("g")).distinct()
     val pairs = groups.as("x").join(groups.as("y"), col("x.g") < col("y.g"))
       .select(col("x.g").as("ga"), col("y.g").as("gb"))

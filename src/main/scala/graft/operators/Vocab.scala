@@ -133,17 +133,16 @@ object Vocab {
       slice(t, lit(1), greatest(size(t) - 1, lit(0))),
       slice(t, lit(2), greatest(size(t) - 1, lit(0))),
       (a, b) => concat_ws(" ", a, b))
-    val cnts = docs.select(explode(pairs).as("bg"))
+    val cnts = Staging.persist(docs.select(explode(pairs).as("bg"))
       .filter(!col("bg").startsWith(" ") && !col("bg").endsWith(" "))
-      .groupBy("bg").agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy("bg").agg(count(lit(1)).as("c")), eager = false)
     try {
       val top = cnts.orderBy(col("c").desc, col("bg").asc).limit(k)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       val total = cnts.agg(coalesce(sum(col("c")), lit(0L)))
         .collect()(0).getLong(0)
       (top, total)
-    } finally cnts.unpersist(blocking = false)
+    } finally Staging.free(cnts)
   }
 
   /** DSIR-style data-selection importance score (Xie et al.'s hashed
@@ -184,12 +183,11 @@ object Vocab {
       slice(t, lit(1), greatest(size(t) - 1, lit(0))),
       slice(t, lit(2), greatest(size(t) - 1, lit(0))),
       (a, b) => concat_ws(" ", a, b))
-    val cnts = docs
+    val cnts = Staging.persist(docs
       .select(targetFilter.as("__is_tgt"), explode(pairs).as("bg"))
       .filter(!col("bg").startsWith(" ") && !col("bg").endsWith(" "))
       .groupBy("bg").agg(count(lit(1)).as("c"),
-        count(when(col("__is_tgt"), lit(1))).as("ct"))
-      .persist()
+        count(when(col("__is_tgt"), lit(1))).as("ct")), eager = false)
     val (bigRaw, nRaw, bigTgt, nTgt) = try {
       val top = cnts.orderBy(col("c").desc, col("bg").asc).limit(k)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
@@ -199,7 +197,7 @@ object Vocab {
       val totals = cnts.agg(coalesce(sum(col("c")), lit(0L)),
         coalesce(sum(col("ct")), lit(0L))).collect()(0)
       (top, totals.getLong(0), topT, totals.getLong(1))
-    } finally cnts.unpersist(blocking = false)
+    } finally Staging.free(cnts)
     docs.select(idCol.as("doc_id"),
         graft.functions.VocabFunctions.bigramInfo(toks(textCol), bigRaw, nRaw).as("r"),
         graft.functions.VocabFunctions.bigramInfo(toks(textCol), bigTgt, nTgt).as("g"))

@@ -2091,15 +2091,14 @@ object Pipeline {
         // ReuseExchange can NOT dedup them because each consumer
         // pushes a different isnotnull set into its copy of the
         // subtree (round-15 plan audit: 4 FileScans, 0 reuse — the
-        // q77 lazy-derivation trap). EAGERLY materialized
-        // (autoFreeEager, round-17): cl/cw/n are three CONCURRENTLY-
-        // launched broadcast jobs racing on the cold lazy cache —
-        // interleaved A/B (pinned heap, identical rows): lazy 0.83
-        // med / 0.68 min s vs eager 0.52 / 0.49 at sf0.1. The
-        // consuming action's end frees the vocabulary-sized blocks as
-        // before (round-16 lifecycle).
-        val cwl = graft.operators.Staged.autoFreeEager(
-          tok.groupBy("lang", "w").agg(count(lit(1)).as("c_wl")))
+        // q77 lazy-derivation trap). EAGERLY materialized (round-17):
+        // cl/cw/n are three CONCURRENTLY-launched broadcast jobs racing
+        // on the cold lazy cache — interleaved A/B (pinned heap,
+        // identical rows): lazy 0.83 med / 0.68 min s vs eager 0.52 /
+        // 0.49 at sf0.1.
+        val cwl = graft.operators.Staging.persist(
+          tok.groupBy("lang", "w").agg(count(lit(1)).as("c_wl")),
+          eager = true)
         val cl = cwl.groupBy("lang").agg(sum("c_wl").as("c_l"))
         val cw = cwl.groupBy("w").agg(sum("c_wl").as("c_w"))
         val n = cwl.agg(sum("c_wl").as("n"))
@@ -3230,16 +3229,14 @@ object Pipeline {
         // (the d15/q63 staging discipline) so the corpus text is
         // scanned and tokenized ONCE — round 15, the q71 offsets
         // lesson applied to q53's own scans. EAGERLY materialized
-        // (autoFreeEager, round-17): the two branches race on the
-        // cold lazy cache — interleaved A/B (pinned heap, identical
-        // rows): lazy 0.64 med / 0.45 min s vs eager 0.54 / 0.46 at
-        // sf0.1. The corpus-row-sized (but ~20×-narrow) blocks are
-        // freed by the consuming action's end as before (round-16
-        // lifecycle — exactly the cache that must not outlive it).
-        val docs = graft.operators.Staged.autoFreeEager(
+        // (round-17): the two branches race on the cold lazy cache —
+        // interleaved A/B (pinned heap, identical rows): lazy 0.64 med
+        // / 0.45 min s vs eager 0.54 / 0.46 at sf0.1.
+        val docs = graft.operators.Staging.persist(
           t(s, d, "documents")
             .select(col("doc_id"), md5(col("text")).as("h"),
-              TextAnalysis.tokenCount(col("text")).as("n_tokens")))
+              TextAnalysis.tokenCount(col("text")).as("n_tokens")),
+          eager = true)
         Packing.globalRunningSum(
             docs,
             bucket = substring(col("h"), 1, 1),

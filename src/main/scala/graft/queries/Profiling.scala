@@ -121,7 +121,7 @@ object Profiling {
           .groupBy(col("event_type"),
             date_trunc("day", col("ts")).as("day"))
           .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
-          .transform(graft.operators.Staged.checkpointStage(_, eager = true))
+          .transform(graft.operators.Staging.checkpoint(_, eager = true))
         val days = agg.agg(min("day").as("mn"), max("day").as("mx"))
           .select(explode(sequence(col("mn"), col("mx"),
             expr("interval 1 day"))).as("day"))

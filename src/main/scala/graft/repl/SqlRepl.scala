@@ -3,9 +3,8 @@ package graft.repl
 import java.io.{BufferedReader, InputStreamReader, PrintStream}
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
-import graft.operators.Staged
+import graft.operators.Staging
 import graft.sinks.CsvExport
 import graft.sources.Ingest
 import graft.{GraftSession, Tables}
@@ -64,8 +63,10 @@ final class SqlRepl(spark: SparkSession, out: PrintStream = System.out,
     case s => Some(s)
   }
 
-  /** Execute one REPL line; returns the rendered table text. */
-  def runLine(line: String): String = {
+  /** Execute one REPL line; returns the rendered table text. The stages
+    * the statement builds (a graft table function's) are freed when it
+    * returns. */
+  def runLine(line: String): String = Staging.scope {
     val (sql, exportPath) = SqlRepl.splitExport(line)
     val df = spark.sql(sql)
     val header = df.columns.toSeq
@@ -196,15 +197,17 @@ object SqlRepl {
   /** Parse workbook `f` once, check its keys, and register the rows as
     * `excel_rows`.
     *
-    * The rows are staged by [[Staged.checkpointStage]]: held in
+    * The rows are staged by [[Staging.checkpoint]]: held in
     * block-manager storage (local checkpoint), or written as a reliable
     * checkpoint when `spark.graft.staging.reliable=true`. The key check
     * and every later statement read the staged rows, not the file.
     *
-    * Lifetime: a load replaces the session's `excel_rows` only after
-    * its checks pass, then frees the rows of the load it replaced. A
-    * failed load (a corrupt sheet, duplicate keys) frees what it staged
-    * and leaves the previous `excel_rows`, if any, queryable. */
+    * Lifetime: the load's [[Staging.Scope]] stays open while its rows
+    * are the session's `excel_rows`. A load replaces the view only
+    * after its checks pass, then closes the scope of the load it
+    * replaced. A failed load (a corrupt sheet, duplicate keys) closes
+    * its own scope and leaves the previous `excel_rows`, if any,
+    * queryable. */
   private def loadWorkbook(spark: SparkSession, f: String, c: CliConf): DataFrame = {
     val reader = spark.read.format("graft.sources.xlsx.XlsxDataSource")
       .option("path", f)
@@ -219,25 +222,22 @@ object SqlRepl {
       case Nil  => Seq(df.columns.head)
       case cols => cols
     }
-    GraftInternal.unpersistOnFailure(spark.sparkContext, s"load $WorkbookTable") {
-      val staged = Staged.checkpointStage(df, eager = true)
+    val load = Staging.open()
+    try load {
+      val staged = Staging.checkpoint(df, eager = true)
       keyCols.foreach(ks => Ingest.assertUnique(staged, ks))
       GraftInternal.backingRdds(staged).foreach(_.setName(WorkbookTable))
-      SqlRepl.synchronized { // one swap at a time: no replaced rows are missed
-        val replaced = stagedRows(spark)
+      SqlRepl.synchronized { // one swap at a time: no replaced load is missed
         staged.createOrReplaceTempView(WorkbookTable)
-        replaced.foreach(GraftInternal.unpersistQuietly)
+        Option(loads.put(spark, load)).foreach(_.close())
       }
       staged
-    }
+    } catch { case e: Throwable => load.close(); throw e }
   }
 
-  /** The staged rows behind the session's current `excel_rows`, when a
-    * workbook load registered it. */
-  private def stagedRows(spark: SparkSession): Seq[RDD[_]] =
-    if (!spark.catalog.tableExists(WorkbookTable)) Nil
-    else GraftInternal.backingRdds(spark.table(WorkbookTable))
-      .filter(_.name == WorkbookTable)
+  /** Each session's current workbook load, whose scope holds the rows
+    * behind `excel_rows`. */
+  private val loads = new java.util.WeakHashMap[SparkSession, Staging.Scope]()
 
   /** Entry point. `runMain graft.repl.SqlRepl <dataDir>` (parquet mode)
     * or `runMain graft.repl.SqlRepl -f file.xlsx -s Sheet1` (reference

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import graft.operators.Staging
 
 /** JSON-Lines sink — corpus export in the shape downstream trainers
   * ingest: one JSON object per line, one shard file per partition.
@@ -15,11 +16,12 @@ import org.apache.spark.sql.DataFrame
   * the write, not here.
   * `ignoreNullFields=false`: a null field and an absent field are
   * different statements in a corpus schema (explicit null survives
-  * round-trips; silent dropping makes schema drift invisible). */
+  * round-trips; silent dropping makes schema drift invisible). Each
+  * write is a [[Staging.scope]], like [[ParquetSink]]'s. */
 object JsonLinesSink {
   def write(df: DataFrame, dir: String,
             compression: String = "gzip",
-            partitionBy: Seq[String] = Nil): Unit = {
+            partitionBy: Seq[String] = Nil): Unit = Staging.scope {
     val w = df.write.mode("overwrite")
       .option("compression", compression)
       .option("ignoreNullFields", "false")

@@ -1,16 +1,19 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import graft.operators.Staging
 
 /** Parquet writer with the layout controls that matter at 100 TB:
   * partition columns for pruning, in-partition sort for row-group
   * skipping (min/max statistics), and an optional target file count.
+  * Each write is a [[Staging.scope]]: the stages of the operators that
+  * built `df` are freed when it returns.
   */
 object ParquetSink {
   def write(df: DataFrame, dir: String,
             partitionBy: Seq[String] = Nil,
             sortWithin: Seq[String] = Nil,
-            files: Option[Int] = None): Unit = {
+            files: Option[Int] = None): Unit = Staging.scope {
     val shaped0 = files.fold(df)(n => df.repartition(n))
     val shaped =
       if (sortWithin.nonEmpty)
@@ -29,7 +32,7 @@ object ParquetSink {
     * BucketSpec). Requires a table name (bucket metadata lives in the
     * catalog, not the parquet footer). */
   def writeBucketed(df: DataFrame, table: String, path: String,
-                    buckets: Int, bucketBy: Seq[String]): Unit =
+                    buckets: Int, bucketBy: Seq[String]): Unit = Staging.scope {
     // cluster to ONE file per bucket before the write: repartition on
     // the bucket key with numPartitions == buckets uses the same
     // murmur3 hash as the bucket assignment, so each task holds
@@ -45,4 +48,5 @@ object ParquetSink {
       .sortBy(bucketBy.head, bucketBy.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+  }
 }

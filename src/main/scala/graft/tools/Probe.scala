@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.{Dedup, Staged}
+import graft.operators.{Dedup, Staging}
 
 /** Dev probes over the gated queries of `SparkEntry.queries`, each run
   * against the noop sink. Dev-only, not part of the shipped library.
@@ -37,6 +37,8 @@ import graft.operators.{Dedup, Staged}
   *    f decides what a fused s-steps-per-job round buys: ceil(f/s)
   *    blocking jobs and (s - f mod s) mod s wasted passes.
   *
+  * Every sample is a [[Staging.scope]], so its stages are freed before
+  * the next one starts, and a GC outside the timed region follows it.
   * `conf=k:v` pairs are set on the session `main` builds, so static
   * confs work too. env: SPARK_GRAFT_SF_DIR (default sf0.1),
   * SPARK_GRAFT_CPUS (default 32). */
@@ -135,25 +137,21 @@ object Probe {
   /** Codegen warm-up at the smallest SF; a failure here is not a probe
     * result. */
   private def warm(spark: SparkSession, fn: Query): Unit =
-    try noop(fn(spark, WarmDir)) catch { case NonFatal(_) => }
+    try Staging.scope(noop(fn(spark, WarmDir))) catch { case NonFatal(_) => }
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Seconds for one build-and-write of `fn` at `dir`. */
+  /** Seconds for one build-and-write of `fn` at `dir`; its stages are
+    * freed and a GC runs after the timed region. */
   private def timed(spark: SparkSession, fn: Query, dir: String): Double = {
-    val t0 = System.nanoTime()
-    noop(fn(spark, dir))
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Between samples: drop cached plans and every persisted RDD
-    * (checkpoint blocks too, which `clearCache` cannot reach). */
-  private def clean(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    val dt = Staging.scope {
+      val t0 = System.nanoTime()
+      noop(fn(spark, dir))
+      (System.nanoTime() - t0) / 1e9
+    }
     System.gc()
+    dt
   }
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
@@ -162,9 +160,8 @@ object Probe {
                    sfDir: String): Unit = {
     val fn = query(name)
     warm(spark, fn)
-    clean(spark)
-    val samples = (1 to iters).map { _ =>
-      val t = timed(spark, fn, sfDir); clean(spark); t }
+    System.gc()
+    val samples = (1 to iters).map(_ => timed(spark, fn, sfDir))
     println(f"$name samples=${samples.map(s => f"$s%.2f").mkString(",")} " +
       f"median=${median(samples)}%.3f")
   }
@@ -178,11 +175,10 @@ object Probe {
     withConfs(spark, Seq(key -> va)) {
       // once per arm: a different conf can mean different generated code
       arms.foreach { case (_, v) => spark.conf.set(key, v); warm(spark, fn) }
-      clean(spark)
+      System.gc()
       for (_ <- 1 to pairs; (arm, v) <- arms) {
         spark.conf.set(key, v)
         times(arm) :+= timed(spark, fn, sfDir)
-        clean(spark)
       }
     }
     arms.foreach { case (arm, v) =>
@@ -207,7 +203,7 @@ object Probe {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val df = try {
+    val df = try Staging.scope {
       val df = query(name)(spark, sfDir)
       noop(df)
       GraftInternal.waitForListeners(spark)
@@ -236,9 +232,9 @@ object Probe {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         ended.put(e.jobId, e.time)
     }
+    System.gc()
     (1 to samples).foreach { s =>
       started.clear(); ended.clear()
-      clean(spark)
       spark.sparkContext.addSparkListener(listener)
       val wall = try {
         val w = timed(spark, fn, sfDir)
@@ -257,16 +253,15 @@ object Probe {
   }
 
   private def cc(spark: SparkSession, sfDir: String): Unit = {
-    val free = GraftInternal.unpersistBackingRdd _
     // one-step rounds, printing every step's change count until a
-    // zero-change step, like the fused loop's confirm step
-    def probe(name: String, pairsDf: DataFrame): Unit = {
-      val edges = pairsDf
+    // zero-change step, like the fused loop's confirm step; the scope
+    // also frees the stages `pairsDf` was built on
+    def probe(name: String, pairsDf: DataFrame): Unit = Staging.scope {
+      val edges = Staging.checkpoint(pairsDf
         .select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
           struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .localCheckpoint(true)
+        .select(col("e.src").as("src"), col("e.dst").as("dst")), eager = true)
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("lbl", col("id"))
       val lblType = labels.schema("lbl").dataType
@@ -274,32 +269,30 @@ object Probe {
       var changed = -1L
       val counts = collection.mutable.ArrayBuffer.empty[Long]
       while (changed != 0L && counts.size < 20) {
-        val next = labels
+        val next = Staging.checkpoint(labels
           .select(col("id"), col("lbl"), col("lbl").as("o"))
           .unionAll(edges.join(labels, edges("dst") === labels("id"))
             .select(edges("src").as("id"), col("lbl"),
               lit(null).cast(lblType).as("o")))
-          .groupBy("id").agg(min("lbl").as("lbl"), min("o").as("o"))
-          .localCheckpoint(false)
+          .groupBy("id").agg(min("lbl").as("lbl"), min("o").as("o")),
+          eager = false)
         changed = next
           .agg(count(when(col("lbl") < col("o"), lit(1))).as("c"))
           .first().getLong(0)
         counts += changed
-        if (prev != null) free(prev)
+        if (prev != null) Staging.free(prev)
         prev = next
         labels = next
       }
-      free(edges)
-      if (prev != null) free(prev)
       val f = counts.length
       println(s"[ccprobe] $name: per-step changes ${counts.mkString(", ")} " +
         s"(f = $f; fused-2 jobs = ${(f + 1) / 2}, fused-3 jobs = ${(f + 2) / 3})")
-      clean(spark)
     }
 
     // d07's pair graph: LSH pairs over the exact-dedup survivors
     val docs = graft.Tables(spark, sfDir, "documents")
-    val survivors = Dedup.exact(docs, md5(col("text")), col("doc_id")).persist()
+    val survivors = Staging.persist(
+      Dedup.exact(docs, md5(col("text")), col("doc_id")), eager = false)
     probe("d07", Dedup.minhashLshPairsStaged(survivors, col("doc_id"),
       col("text"), 16, 4, 0.6, 42L, None).result)
 
@@ -312,18 +305,20 @@ object Probe {
     val batch = sub.filter(col("doc_id") % 7 === 0)
     val b1 = Dedup.exact(batch, md5(col("text")), col("doc_id"))
     val corpusHashes = corpus.select(md5(col("text")).as("__ch")).distinct()
-    val b2 = b1.join(corpusHashes, md5(col("text")) === col("__ch"), "left_anti")
-      .persist()
+    val b2 = Staging.persist(
+      b1.join(corpusHashes, md5(col("text")) === col("__ch"), "left_anti"),
+      eager = false)
     val keyed = corpus.select(col("doc_id").cast("long").as("kid"),
         col("text").as("ktext"))
       .unionAll(b2.select((col("doc_id").cast("long") + FLAG).as("kid"),
         col("text").as("ktext")))
     val bands = 16; val rowsPerBand = 4
-    val sigs = Staged.autoFreeEager(keyed
+    val sigs = Staging.persist(keyed
       .select(col("kid").as("id"), Dedup.shingleHashes(col("ktext")).as("h"))
       .filter(size(col("h")) > 0)
       .select(col("id"), col("h"), graft.functions.MinHashFunctions
-        .minhashSig(col("h"), bands * rowsPerBand, 42L).as("sig")))
+        .minhashSig(col("h"), bands * rowsPerBand, 42L).as("sig")),
+      eager = true)
     val bandCols = (0 until bands).map { b =>
       val bandSig = concat_ws("_",
         (0 until rowsPerBand).map(r =>

@@ -258,6 +258,10 @@ class ReplSpec extends TestSpark {
       load(p)
       intercept[graft.sources.Ingest.DuplicateKeysException](
         load(workbook("dup2.xlsx", services("x", "x"))))
+      // a statement whose operator frees CC checkpoints as it goes
+      Tables.registerAll(spark, sfDir)
+      new SqlRepl(spark).runLine(
+        "SELECT count(*) FROM dedup_corpus('documents', 'doc_id', 'text')")
       assert(warned.isEmpty, warned)
     } finally {
       root.removeAppender(appender.getName)
@@ -265,6 +269,18 @@ class ReplSpec extends TestSpark {
       appender.stop()
     }
     assert(names() === Seq("a", "b"))
+  }
+
+  test("a REPL statement over dedup_corpus leaves the persisted RDDs and " +
+       "the cached plans as they were") {
+    Tables.registerAll(spark, sfDir)
+    val repl = new SqlRepl(spark)
+    val (before, entries) = (persisted, cacheEntries)
+    val out = repl.runLine(
+      "SELECT count(*) AS n FROM dedup_corpus('documents', 'doc_id', 'text')")
+    assert(out.contains("| n"), out)
+    assert(persisted -- before === Set.empty)
+    assert(cacheEntries === entries)
   }
 
   test("workbook load: statements read the staged rows and never scan the " +

@@ -1,154 +1,213 @@
 package graft
 
-import org.apache.spark.sql.GraftInternal
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Lifecycle of intra-operator staging caches (round-16, verdict
-  * item 6): operators that stage a multi-consumer intermediate (d15's
-  * domain counts, q63's vocabulary table, q53's tokenized projection)
-  * must not leave persistent RDDs behind once the action that
-  * consumes them completes — a long-lived library/REPL session
-  * calling them in a loop must not accumulate block-manager scratch.
-  * Round 17 moved the gated sites to
-  * [[graft.operators.Staged.autoFreeEager]] (a lazy cache was
-  * populated cold by whichever consumer stage won the race — A/B'd at
-  * −13…−37 % med); the eager variant materializes the cache with its
-  * own count() action, whose sweep is absorbed by a one-sweep grace,
-  * and the consuming action's end frees the blocks exactly as before.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftInternal}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{Dedup, Staging}
+
+/** Lifetime of operator stages ([[graft.operators.Staging]]): a stage
+  * lives until the scope that owns it ends, the statement that reads it,
+  * and then nothing it cached or checkpointed is left in the session. A
+  * stage belongs to the thread that built it, so concurrent statements
+  * cannot free each other's stages, and a failed stage frees itself.
   */
 class StagedSpec extends TestSpark {
 
-  /** Runs the gated query end-to-end (noop sink action) and returns
-    * the persistent-RDD ids the run left behind. */
-  private def leakedBy(name: String): Set[Int] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    GraftInternal.waitForListeners(spark)
-    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Runs the gated query end to end in a scope (noop sink action) and
+    * returns the persistent-RDD ids and cache entries it left behind. */
+  private def leakedBy(name: String): (Set[Int], Int) = {
+    val (before, entries) = (persisted, cacheEntries)
+    Staging.scope(noop(SparkEntry.queries(name)(spark, sfDir)))
+    (persisted -- before, cacheEntries - entries)
   }
 
   test("d15: the staged per-domain count cache frees itself after the " +
        "consuming action — no persistent RDDs left") {
-    assert(leakedBy("d15_domain_cap").isEmpty)
+    assert(leakedBy("d15_domain_cap") === (Set.empty, 0))
   }
 
   test("q63: the staged (lang, token) vocabulary cache frees itself " +
        "after the consuming action") {
-    assert(leakedBy("q63_mi_feature_select").isEmpty)
+    assert(leakedBy("q63_mi_feature_select") === (Set.empty, 0))
   }
 
   test("q53: the staged tokenized-corpus projection (corpus-row-sized " +
        "— the one that MUST not outlive the action) frees itself") {
-    assert(leakedBy("q53_shard_pack").isEmpty)
+    assert(leakedBy("q53_shard_pack") === (Set.empty, 0))
   }
 
-  test("autoFreeEager: the materializing count's own execution end " +
-       "does not free the stage (one-sweep grace) — the NEXT " +
-       "execution does") {
-    import org.apache.spark.sql.functions._
-    val staged = graft.operators.Staged.autoFreeEager(
-      spark.range(10000).toDF("v").groupBy(col("v") % 13).count())
-    GraftInternal.waitForListeners(spark)
-    // after the eager count + its sweep, the cache must still be live
-    // (a consumer arriving now must read warm blocks, not recompute)
-    assert(GraftInternal.stagedCacheLoaded(staged) === Some(true),
-      "stage must stay cached past its own materializing action")
-    // the consuming action's end frees it
-    staged.write.format("noop").mode("overwrite").save()
-    GraftInternal.waitForListeners(spark)
-    assert(GraftInternal.stagedCacheLoaded(staged).isEmpty,
-      "stage must be freed once the consuming action completes")
+  test("an eager stage outlives its own count and other statements' " +
+       "scopes; free and the end of its own scope release it") {
+    val own = Staging.open()
+    val (a, b) = own {
+      (Staging.persist(
+         spark.range(10000).toDF("v").groupBy(col("v") % 13).count(),
+         eager = true),
+       Staging.checkpoint(spark.range(50).toDF("w"), eager = true))
+    }
+    // other statements, on this thread and on another one
+    Staging.scope(noop(spark.range(10).toDF("x")))
+    val t = new Thread(() => Staging.scope(noop(spark.range(10).toDF("y"))))
+    t.start(); t.join()
+    assert(a.storageLevel.useMemory, "a stage was freed by another scope")
+    assert(b.count() === 50L)
+    Staging.free(b)
+    assert(GraftInternal.backingRdds(b).forall(r =>
+      !spark.sparkContext.getPersistentRDDs.contains(r.id)))
+    own.close()
+    assert(a.storageLevel === StorageLevel.NONE)
   }
 
   test("eagerly staged operators still compute a fresh answer twice " +
        "in a row in one session (new stage per call, not a stale cache)") {
     val q = SparkEntry.queries("d15_domain_cap")
-    val a = q(spark, sfDir).collect().map(_.toString).toSeq
-    GraftInternal.waitForListeners(spark)
-    val b = q(spark, sfDir).collect().map(_.toString).toSeq
-    GraftInternal.waitForListeners(spark)
+    val a = Staging.scope(q(spark, sfDir).collect().map(_.toString).toSeq)
+    val b = Staging.scope(q(spark, sfDir).collect().map(_.toString).toSeq)
     assert(a === b)
   }
 
-  test("build-but-never-run staged plans do not grow the registry " +
-       "without bound (age fallback reclaims them within " +
-       "maxAgeExecutions completed executions)") {
-    import org.apache.spark.sql.functions._
-    val saved = graft.operators.Staged.maxAgeExecutions
-    graft.operators.Staged.maxAgeExecutions = 2L
-    try {
-      val before = graft.operators.Staged.pendingCount
-      // Stage three plans and never run them — the un-run-residue path.
-      (1 to 3).foreach { i =>
-        graft.operators.Staged.autoFree(
-          spark.range(100 + i).toDF("v").groupBy(col("v") % 7).count())
-      }
-      assert(graft.operators.Staged.pendingCount >= before)
-      // A handful of unrelated completed executions must age them out.
-      (1 to 4).foreach { _ =>
-        spark.range(10).toDF("x").write.format("noop").mode("overwrite").save()
-        GraftInternal.waitForListeners(spark)
-      }
-      assert(graft.operators.Staged.pendingCount <= before,
-        "aged un-run staged entries must be reclaimed by the sweep")
-    } finally graft.operators.Staged.maxAgeExecutions = saved
+  test("stages built outside any scope are freed by the next scope " +
+       "on their thread") {
+    val entries = cacheEntries
+    // three staged plans that never run
+    val built = (1 to 3).map { i =>
+      Staging.persist(
+        spark.range(100 + i).toDF("v").groupBy(col("v") % 7).count(),
+        eager = false)
+    }
+    assert(cacheEntries === entries + 3)
+    Staging.scope(noop(spark.range(10).toDF("x")))
+    assert(cacheEntries === entries)
+    assert(built.forall(_.storageLevel == StorageLevel.NONE))
   }
 
-  test("registration sweeps do not spend grace: a loaded grace-" +
-       "protected entry survives a register()-time sweep untouched " +
-       "(round-18 ADVICE fix)") {
-    import org.apache.spark.sql.functions._
-    // grace = 2 so the materializing count's own (async) sweep leaves
-    // exactly 1 grace whenever it lands — deterministic regardless of
-    // listener-bus timing
-    val p = graft.operators.Staged.registerForTest(
-      spark.range(5000).toDF("v").groupBy(col("v") % 11).count(), grace = 2)
-    p.count()
-    GraftInternal.waitForListeners(spark) // count's sweep: grace 2 → 1
-    // a registration-style sweep must neither free NOR spend grace
-    graft.operators.Staged.sweepForTest(consumeGrace = false)
-    assert(GraftInternal.stagedCacheLoaded(p) === Some(true),
-      "a registration sweep freed a loaded grace-protected entry")
-    // grace must still be 1: the next execution-end sweep spends it...
-    graft.operators.Staged.sweepForTest(consumeGrace = true)
-    assert(GraftInternal.stagedCacheLoaded(p) === Some(true),
-      "grace was spent by the registration sweep (should have survived " +
-        "one more execution-end sweep)")
-    // ...and the one after frees the blocks
-    graft.operators.Staged.sweepForTest(consumeGrace = true)
-    assert(GraftInternal.stagedCacheLoaded(p).isEmpty,
-      "entry must be freed once its grace is exhausted")
-  }
-
-  test("autoFreeEager on a plan the USER already persisted does not " +
-       "run an eager count on the caller's cache (round-18 ADVICE fix)") {
+  test("Staging.persist(eager) on a plan the USER already persisted " +
+       "runs no count on the caller's cache and never frees it") {
     val user = spark.range(2000).toDF("v").persist() // deliberately lazy
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
     try {
-      val again = graft.operators.Staged.autoFreeEager(
-        spark.range(2000).toDF("v"))
       GraftInternal.waitForListeners(spark)
-      // the caller's lazy persist must still be UNloaded: no count()
-      // may have materialized a cache the operator does not own
-      assert(GraftInternal.stagedCacheLoaded(user) === Some(false),
-        "autoFreeEager materialized a caller-owned cache")
-      assert(GraftInternal.stagedCacheLoaded(again) === Some(false))
+      spark.sparkContext.addSparkListener(listener)
+      val again = try Staging.scope {
+        val s = Staging.persist(spark.range(2000).toDF("v"), eager = true)
+        Staging.free(s)
+        s
+      } finally {
+        GraftInternal.waitForListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(jobs.get === 0, "an eager stage materialized a caller-owned cache")
+      assert(user.storageLevel.useMemory && again.storageLevel.useMemory)
     } finally user.unpersist()
   }
 
-  test("autoFree on a plan the USER already cached leaves the user's " +
-       "cache alive (sameResult CacheManager entry is not stolen)") {
+  test("Staging.persist on a plan the USER already cached leaves the " +
+       "user's cache alive after the stage's scope ends") {
     val user = spark.range(1000).toDF("v").persist()
     try {
       user.count() // materialize the user's cache
-      val again = graft.operators.Staged.autoFree(spark.range(1000).toDF("v"))
-      again.write.format("noop").mode("overwrite").save()
-      GraftInternal.waitForListeners(spark)
-      // run one more action so the sweep definitely fired after the
-      // staged consumer completed
-      spark.range(5).toDF("y").write.format("noop").mode("overwrite").save()
-      GraftInternal.waitForListeners(spark)
+      Staging.scope(noop(
+        Staging.persist(spark.range(1000).toDF("v"), eager = false)))
       assert(user.storageLevel.useMemory,
-        "autoFree must not unpersist a pre-existing user cache")
+        "a scope unpersisted a pre-existing user cache")
     } finally user.unpersist()
+  }
+
+  test("a failed eager stage frees itself, and an operator failing " +
+       "inside a scope leaves no persisted RDD or cache entry") {
+    import spark.implicits._
+    val (before, entries) = (persisted, cacheEntries)
+    val bad = spark.range(200).toDF("v")
+      .select(col("v"), assert_true(col("v") < 150).as("ok"))
+    // outside any scope: the stage itself must clean up
+    intercept[Exception](Staging.checkpoint(bad, eager = true))
+    intercept[Exception](Staging.persist(bad, eager = true))
+    assert(persisted -- before === Set.empty)
+    assert(cacheEntries === entries)
+    // incrementalDedup's id check fails inside its eager CC edge
+    // checkpoint, after its lazy stages were read into cache
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    val badBatch = Seq((-5L, "zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    intercept[Exception](Staging.scope(
+      Dedup.incrementalDedup(corpus, col("doc_id"), col("text"),
+        badBatch, col("doc_id"), col("text")).collect()))
+    assert(persisted -- before === Set.empty)
+    assert(cacheEntries === entries)
+  }
+
+  test("d03, s06, q63 and d15 at once on four threads, one scope each, " +
+       "return the serial rows and leave nothing staged") {
+    val names = Seq("d03_minhash_lsh", "s06_knn_centrality",
+      "q63_mi_feature_select", "d15_domain_cap")
+    def rows(name: String): Seq[String] = Staging.scope(
+      SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString)
+        .toSeq.sorted)
+    val serial = names.map(rows)
+    val (before, entries) = (persisted, cacheEntries)
+    val got = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val threads = names.map { n =>
+      new Thread(() =>
+        try got.put(n, rows(n)) catch { case e: Throwable => err.set(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    if (err.get != null) throw err.get
+    names.zip(serial).foreach { case (n, s) => assert(got.get(n) === s, n) }
+    assert(persisted === before)
+    assert(cacheEntries === entries)
+  }
+
+  test("q63 built, then two actions on another thread, then acted on, " +
+       "runs as many jobs as a solo run (its eager stage is not freed)") {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.q63"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    def q63Jobs(between: => Unit): Int = {
+      GraftInternal.waitForListeners(spark)
+      jobs.set(0)
+      sc.setLocalProperty(tag, "q63")
+      try Staging.scope {
+        val df = SparkEntry.queries("q63_mi_feature_select")(spark, sfDir)
+        between
+        noop(df)
+      } finally sc.setLocalProperty(tag, null)
+      GraftInternal.waitForListeners(spark)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val solo = q63Jobs(())
+      val interleaved = q63Jobs {
+        val t = new Thread(() => {
+          sc.setLocalProperty(tag, null) // not inherited: not q63's jobs
+          (1 to 2).foreach(i =>
+            Staging.scope(noop(spark.range(10 * i).toDF("x"))))
+        })
+        t.start(); t.join()
+        GraftInternal.waitForListeners(spark)
+      }
+      assert(interleaved === solo)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -20,6 +20,9 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Entries in the session's CacheManager (cached plans). */
+  def cacheEntries: Int = org.apache.spark.sql.CacheEntries(spark)
+
   override def afterEach(): Unit = {
     // staged operators persist() intermediates; consecutive tests (and
     // queries sharing a stage plan, e.g. d03/d06/d07) would otherwise
