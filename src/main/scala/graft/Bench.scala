@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.Staging
 
 /** Benchmark main: runs the headline query set on
   * `SPARK_GRAFT_SF_DIR`, prints the full per-query-seconds JSON record
@@ -242,8 +243,8 @@ object Bench {
     // recompiled 1026 of them. So timings below are data work plus most
     // of each plan's compile.
     SparkEntry.queries.view.filterKeys(run.contains).foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
+      try Staging.scope(fn(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save())
       catch { case _: Throwable => }
     }
 
@@ -257,22 +258,19 @@ object Bench {
       collection.mutable.Map(run.map(_ -> Vector.empty[Option[Double]]): _*)
     for (_ <- 1 to samples; name <- run) {
       val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // staged operators (LSH signatures etc.) persist() intermediates;
-      // drop them so caches don't accumulate across the suite. clearCache
-      // only knows CacheManager entries — localCheckpoint blocks from the
-      // connected-components rounds (d07/d08) live in the block manager
-      // until RDD GC, so drop every persisted RDD explicitly too.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // each sample is a staging scope: the operators' stages (LSH
+      // signatures, CC checkpoints) are freed when it ends, after the
+      // timed region, so no cache carries over to the next sample
+      val (ok, dt) = Staging.scope {
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            false
+          }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
       // broadcasts (dim hash relations, Bloom bits) are reaped by the
       // ContextCleaner only after their weak refs are GC'd; a pinned
       // 64 GB heap can go many samples without a collection, so dead
