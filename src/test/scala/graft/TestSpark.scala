@@ -24,9 +24,9 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll
   def cacheEntries: Int = org.apache.spark.sql.CacheEntries(spark)
 
   override def afterEach(): Unit = {
-    // staged operators persist() intermediates; consecutive tests (and
-    // queries sharing a stage plan, e.g. d03/d06/d07) would otherwise
-    // re-persist already-cached plans — clear like Verify/Bench do
+    // specs cache plans of their own and run staged operators outside a
+    // Staging.scope; consecutive tests (and queries sharing a stage
+    // plan, e.g. d03/d06/d07) would otherwise find those plans cached
     spark.catalog.clearCache()
     super.afterEach()
   }
