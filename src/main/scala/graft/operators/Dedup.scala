@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -293,7 +299,9 @@ object Dedup {
 
   /** Connected components over a near-dup pair list — the clustering
     * step of a dedup pipeline (pairs alone don't say which docs form
-    * one duplicate group; transitive closure does). Iterative
+    * one duplicate group; transitive closure does). A graph of at
+    * most [[LocalMaxEdges]] edge rows is finished on the driver (see
+    * [[connectedComponentsStaged]]). A larger one runs iterative
     * min-label propagation: each round every node takes the smallest
     * label among itself and its neighbours (one join + one min-agg
     * shuffle per round), until a fixpoint. Rounds needed = component
@@ -310,8 +318,126 @@ object Dedup {
     connectedComponentsStaged(pairs, idA, idB, maxIters).result
 
   /** [[connectedComponents]] with the final-labels frame exposed for
-    * caller-owned cleanup (it is checkpoint-backed — see below — so
-    * materialize the result before calling `cleanup()`).
+    * caller-owned cleanup (materialize the result before calling
+    * `cleanup()`).
+    *
+    * The size of the graph picks the path. The pair list is first
+    * staged as an edge checkpoint (each pair once per direction), and
+    * one `take` reads at most [[LocalMaxEdges]] + 1 of its rows:
+    *  - at most [[LocalMaxEdges]] rows: the driver finishes the graph
+    *    with a union-find and returns the labels as a local relation.
+    *    The edge stage is freed and the result holds no stage. Near-dup
+    *    graphs mined from a corpus are this small far beyond the gated
+    *    scale factors, and the loop would spend a job floor per fused
+    *    round to label them;
+    *  - over the bound, or ids of a type other than the integral types
+    *    and binary-collated strings: the distributed min-label loop of
+    *    [[labelLoop]] runs on the staged edges, with `maxIters` and
+    *    `stepsPerJob` as documented there.
+    * Both paths give the same rows, (id, cluster_id = min id reachable
+    * in Spark's `min` order) for every id in `pairs` (DedupSpec checks
+    * the equivalence, a null id included). */
+  def connectedComponentsStaged(pairs: DataFrame, idA: String = "id_a",
+                          idB: String = "id_b",
+                          maxIters: Int = 20,
+                          stepsPerJob: Int = 2): Staged = {
+    require(stepsPerJob >= 1,
+      s"stepsPerJob must be >= 1, got $stepsPerJob")
+    val edges = edgeStage(pairs, idA, idB)
+    val small =
+      try localOrder(edges.schema("src").dataType)
+        .map(order => (order, edges.take(LocalMaxEdges + 1)))
+        .filter(_._2.length <= LocalMaxEdges)
+      catch { case e: Throwable => Staging.free(edges); throw e }
+    small match {
+      case Some((order, rows)) =>
+        val labels = localLabels(edges, rows, order)
+        Staging.free(edges)
+        Staged(labels, Nil)
+      case None => labelRounds(edges, maxIters, stepsPerJob)
+    }
+  }
+
+  /** Edge rows up to which [[connectedComponentsStaged]] finishes a
+    * graph on the driver. Driver memory at the bound, long ids: the
+    * taken rows (about 100 bytes each as unsafe and then external rows
+    * with two boxed longs) and the id index and union-find (about 80
+    * bytes an id), under 50 MB; string ids add about twice their
+    * length per row. Spark's default `spark.driver.maxResultSize` (1g)
+    * and the smallest graft driver heap (2g) leave room for that. */
+  private[graft] val LocalMaxEdges: Int = 1 << 18
+
+  /** Spark's `min` order over the external values of an id column of
+    * type `t`, for the types the driver finish handles. */
+  private def localOrder(t: DataType): Option[Ordering[Any]] = t match {
+    case LongType | IntegerType | ShortType | ByteType =>
+      Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+    case StringType => // UTF-8 byte order, not String.compareTo's UTF-16
+      Some(Ordering.fromLessThan[Any]((a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .binaryCompare(UTF8String.fromString(b.asInstanceOf[String])) < 0))
+    case _ => None
+  }
+
+  /** The driver finish: union-find over the (src, dst) `rows`, each
+    * root kept at its component's min id, so an id's root is its label.
+    * A null id is one node that joins nothing, as in the loop, whose
+    * join never matches a null: it takes the least label of its
+    * neighbours (null when it has none) but passes its own on to none. */
+  private def localLabels(edges: DataFrame, rows: Array[Row],
+                          order: Ordering[Any]): DataFrame = {
+    val ids = mutable.ArrayBuffer.empty[Any]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    val index = mutable.HashMap.empty[Any, Int]
+    var hasNull = false
+    val nullNeighbours = mutable.ArrayBuffer.empty[Int]
+    def node(id: Any): Int =
+      if (id == null) { hasNull = true; -1 }
+      else index.getOrElseUpdate(id, { ids += id; parent += ids.length - 1
+                                       ids.length - 1 })
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    rows.foreach { r =>
+      val (a, b) = (node(r.get(0)), node(r.get(1)))
+      if (a >= 0 && b >= 0) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb)
+          if (order.lt(ids(ra), ids(rb))) parent(rb) = ra else parent(ra) = rb
+      } else if (a >= 0 || b >= 0) nullNeighbours += math.max(a, b)
+    }
+    val labelled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    val nullRow = Row(null,
+      nullNeighbours.map(i => ids(find(i))).minOption(order).orNull)
+    val src = edges.schema("src")
+    edges.sparkSession.createDataFrame(
+      (if (hasNull) labelled :+ nullRow else labelled).asJava,
+      StructType(Seq(src.copy(name = "id"),
+        StructField("cluster_id", src.dataType, nullable = true))))
+  }
+
+  /** Both directions of every pair as (src, dst), checkpointed eagerly:
+    * materialized once, read by the driver finish or every loop round
+    * as a flat LogicalRDD. Both directions come from ONE explode, not a
+    * self-union — the union's second branch re-ran the whole
+    * pair-mining subtree (band self-join + exact verify under d07/d10,
+    * the hamming join under m06) inside the checkpoint job;
+    * explode(array) emits the same two rows per pair in a single pass
+    * over `pairs`. */
+  private def edgeStage(pairs: DataFrame, idA: String, idB: String): DataFrame =
+    Staging.checkpoint(pairs
+      .select(explode(array(
+        struct(col(idA).as("src"), col(idB).as("dst")),
+        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")),
+      eager = true)
+
+  /** The distributed min-label loop of [[connectedComponentsStaged]],
+    * which runs it above [[LocalMaxEdges]] edge rows; specs call it
+    * directly to exercise the loop on small graphs. Its labels are
+    * checkpoint-backed, so materialize the result before `cleanup()`.
     *
     * `stepsPerJob` propagation steps per blocking job (round 18;
     * default 2): near-dup components are clique-ish (min-label
@@ -367,24 +493,17 @@ object Dedup {
     * only widen the per-round join fan-out, so pre-`distinct` a pair
     * list with heavy duplication. LSH/SimHash pair miners already emit
     * unique pairs. */
-  def connectedComponentsStaged(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b",
-                          maxIters: Int = 20,
-                          stepsPerJob: Int = 2): Staged = {
+  private[graft] def labelLoop(pairs: DataFrame, idA: String = "id_a",
+                               idB: String = "id_b", maxIters: Int = 20,
+                               stepsPerJob: Int = 2): Staged = {
     require(stepsPerJob >= 1,
       s"stepsPerJob must be >= 1, got $stepsPerJob")
-    // eager: materialized once, read every round as a flat LogicalRDD.
-    // Both edge directions come from ONE explode, not a self-union —
-    // the union's second branch re-ran the whole pair-mining subtree
-    // (band self-join + exact verify under d07/d10, the hamming join
-    // under m06) inside the checkpoint job; explode(array) emits the
-    // same two rows per pair in a single pass over `pairs`.
-    val edges = Staging.checkpoint(pairs
-      .select(explode(array(
-        struct(col(idA).as("src"), col(idB).as("dst")),
-        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      eager = true)
+    labelRounds(edgeStage(pairs, idA, idB), maxIters, stepsPerJob)
+  }
+
+  /** [[labelLoop]]'s rounds over the staged `edges`, which it frees. */
+  private def labelRounds(edges: DataFrame, maxIters: Int,
+                          stepsPerJob: Int): Staged = {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
     val lblType = labels.schema("lbl").dataType
@@ -452,15 +571,17 @@ object Dedup {
   final class CcRoundBudgetExceeded(msg: String)
     extends IllegalStateException(msg)
 
-  /** [[connectedComponentsStaged]] with automatic strategy fallback:
-    * min-label propagation first (near-dup clusters are clique-ish —
-    * diameter 2-3, so ~3 one-job rounds win), and if the round budget
-    * is exhausted (chain-shaped duplicate families: serial edits,
-    * sliding-window shards — diameter grows with corpus size), rerun
-    * with [[connectedComponentsTwoPhase]], whose round count is
-    * O(log n) regardless of diameter. The failed propagation frees all
-    * its blocks on the way out (its catch path), so the fallback
-    * recomputes only `pairs`' lineage — cheap when pairs ride
+  /** [[connectedComponentsStaged]] with automatic strategy fallback.
+    * A graph of at most [[LocalMaxEdges]] edge rows is finished on the
+    * driver, whatever its diameter, so the fallback never runs for it.
+    * A larger one runs min-label propagation first (near-dup clusters
+    * are clique-ish — diameter 2-3, so ~3 one-job rounds win), and if
+    * the round budget is exhausted (chain-shaped duplicate families:
+    * serial edits, sliding-window shards — diameter grows with corpus
+    * size), reruns with [[connectedComponentsTwoPhase]], whose round
+    * count is O(log n) regardless of diameter. The failed propagation
+    * frees all its blocks on the way out (its catch path), so the
+    * fallback recomputes only `pairs`' lineage — cheap when pairs ride
     * persisted signature stages, as in [[dedupCorpus]] /
     * [[incrementalDedup]] (both route through this). The propagation
     * budget is deliberately left at the cheap default rather than
@@ -469,8 +590,15 @@ object Dedup {
   def connectedComponentsAuto(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxLabelRounds: Int = 20,
       maxStarRounds: Int = 30, stepsPerJob: Int = 2): Staged =
-    try connectedComponentsStaged(pairs, idA, idB, maxLabelRounds,
-      stepsPerJob)
+    starFallback(pairs, idA, idB, maxStarRounds)(
+      connectedComponentsStaged(pairs, idA, idB, maxLabelRounds, stepsPerJob))
+
+  /** `labels`, or [[connectedComponentsTwoPhase]] over `pairs` when
+    * `labels` exhausts its propagation round budget; specs pass
+    * [[labelLoop]] to exercise the fallback on small graphs. */
+  private[graft] def starFallback(pairs: DataFrame, idA: String, idB: String,
+      maxStarRounds: Int)(labels: => Staged): Staged =
+    try labels
     catch { case _: CcRoundBudgetExceeded =>
       connectedComponentsTwoPhase(pairs, idA, idB, maxStarRounds)
     }
@@ -580,17 +708,21 @@ object Dedup {
       seed, maxBucketSize, twoPhaseCc).result
 
   /** [[dedupCorpus]] with the persisted stages (survivors + LSH
-    * signatures + CC labels) exposed for caller-owned cache cleanup,
+    * signatures + the CC labels of a graph above the driver-finish
+    * bound) exposed for caller-owned cache cleanup,
     * like the other staged miners.
     *
     * `twoPhaseCc` FORCES the clustering step onto
     * [[connectedComponentsTwoPhase]] — same clusters (spec-proven),
     * O(log n) rounds instead of diameter-many — for callers that know
     * their duplicate families are chain-shaped (serial edits). The
-    * default routes through [[connectedComponentsAuto]]: clique-ish
-    * clusters converge in ~3 cheap propagation rounds, and a
-    * high-diameter corpus falls back to star contraction instead of
-    * throwing. */
+    * default routes through [[connectedComponentsAuto]], where the
+    * pair graph's size picks the path: up to [[LocalMaxEdges]] edge
+    * rows (each pair counts twice) the driver labels it after the edge
+    * checkpoint and one `take`, with no propagation round, whatever the
+    * diameter; above it clique-ish clusters converge in ~3 propagation
+    * rounds, and a high-diameter corpus falls back to star contraction
+    * instead of throwing. */
   def dedupCorpusStaged(df: DataFrame, id: Column, text: Column,
                   minJaccard: Double = 0.7,
                   bands: Int = 16, rowsPerBand: Int = 4,

@@ -139,6 +139,14 @@ object Probe {
   private def warm(spark: SparkSession, fn: Query): Unit =
     try Staging.scope(noop(fn(spark, WarmDir))) catch { case NonFatal(_) => }
 
+  /** [[warm]], then one untimed sample at the measured `dir`: the small
+    * SF alone leaves the JIT short of steady state, and the first
+    * samples at `dir` ran a third or more slower than the last. */
+  private def settle(spark: SparkSession, fn: Query, dir: String): Unit = {
+    warm(spark, fn)
+    timed(spark, fn, dir)
+  }
+
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -159,8 +167,7 @@ object Probe {
   private def time(spark: SparkSession, name: String, iters: Int,
                    sfDir: String): Unit = {
     val fn = query(name)
-    warm(spark, fn)
-    System.gc()
+    settle(spark, fn, sfDir)
     val samples = (1 to iters).map(_ => timed(spark, fn, sfDir))
     println(f"$name samples=${samples.map(s => f"$s%.2f").mkString(",")} " +
       f"median=${median(samples)}%.3f")
@@ -174,8 +181,8 @@ object Probe {
                                        "B" -> Vector.empty[Double])
     withConfs(spark, Seq(key -> va)) {
       // once per arm: a different conf can mean different generated code
-      arms.foreach { case (_, v) => spark.conf.set(key, v); warm(spark, fn) }
-      System.gc()
+      arms.foreach { case (_, v) =>
+        spark.conf.set(key, v); settle(spark, fn, sfDir) }
       for (_ <- 1 to pairs; (arm, v) <- arms) {
         spark.conf.set(key, v)
         times(arm) :+= timed(spark, fn, sfDir)

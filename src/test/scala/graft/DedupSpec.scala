@@ -244,8 +244,7 @@ class DedupSpec extends TestSpark {
       .filter { case (a, b) => a != b }
       .toDF("id_a", "id_b")
     val got = Seq(1, 2, 3).map { s =>
-      val st = Dedup.connectedComponentsStaged(pairs, maxIters = 60,
-        stepsPerJob = s)
+      val st = Dedup.labelLoop(pairs, maxIters = 60, stepsPerJob = s)
       val labels = st.result.as[(Long, Long)].collect().toMap
       st.cleanup()
       labels
@@ -255,23 +254,63 @@ class DedupSpec extends TestSpark {
   }
 
   test("two-phase CC equals label propagation on a random graph") {
-    val rnd = new scala.util.Random(42)
-    val pairs = (1 to 120)
-      .map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    val viaLabels = Dedup.connectedComponents(pairs, maxIters = 60)
-      .as[(Long, Long)].collect().toMap
-    val twoPhase = Dedup.connectedComponentsTwoPhase(pairs)
-    val viaStars = twoPhase.result.as[(Long, Long)].collect().toMap
-    twoPhase.cleanup()
-    assert(viaStars === viaLabels)
+    // and so does the driver finish, which a graph this small takes
+    Seq(42, 7, 1, 2024).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val pairs = (1 to 120)
+        .map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+        .filter { case (a, b) => a != b }
+        .toDF("id_a", "id_b")
+      val loop = Dedup.labelLoop(pairs, maxIters = 60)
+      val viaLabels = loop.result.as[(Long, Long)].collect().toMap
+      loop.cleanup()
+      val twoPhase = Dedup.connectedComponentsTwoPhase(pairs)
+      val viaStars = twoPhase.result.as[(Long, Long)].collect().toMap
+      twoPhase.cleanup()
+      val local = Dedup.connectedComponentsStaged(pairs, maxIters = 60)
+      assert(local.stages.isEmpty, s"seed $seed: not finished on the driver")
+      val viaDriver = local.result.as[(Long, Long)].collect().toMap
+      assert(viaStars === viaLabels, s"seed $seed")
+      assert(viaDriver === viaLabels, s"seed $seed")
+    }
+  }
+
+  test("the driver finish gives the label loop's rows: int and string " +
+       "ids, self and duplicate pairs, empty and null ids") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.toString)
+    def same(pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val loop = Dedup.labelLoop(pairs)
+      val want = rows(loop.result)
+      val wantSchema = loop.result.schema
+      loop.cleanup()
+      val local = Dedup.connectedComponentsStaged(pairs)
+      assert(local.stages.isEmpty, "not finished on the driver")
+      assert(local.result.schema === wantSchema)
+      assert(rows(local.result) === want)
+    }
+    same(Seq((1, 2), (2, 3), (10, 11), (7, 5)).toDF("id_a", "id_b"))
+    // Spark's min is UTF-8 byte order: "｡" (U+FF61) sorts before "😀"
+    // (U+1F600), though String.compareTo puts the surrogate pair first
+    same(Seq(("😀", "｡"), ("b", "ab"), ("ab", "a"), ("é", "e"))
+      .toDF("id_a", "id_b"))
+    val emoji = Dedup.connectedComponents(Seq(("😀", "｡")).toDF("id_a", "id_b"))
+      .as[(String, String)].collect().toMap
+    assert(emoji === Map("😀" -> "｡", "｡" -> "｡"))
+    same(Seq((1L, 1L), (2L, 3L), (3L, 2L), (2L, 3L), (4L, 4L), (4L, 5L))
+      .toDF("id_a", "id_b"))
+    same(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    // a null id takes its neighbours' least label and passes on none
+    same(Seq((Some(1L), Some(2L)), (None, Some(2L)), (Some(3L), None),
+      (None, None)).toDF("id_a", "id_b"))
+    same(Seq((Some(1L), Some(2L)), (None, None)).toDF("id_a", "id_b"))
   }
 
   test("connectedComponentsAuto falls back to star contraction when the " +
        "propagation budget is exhausted") {
     val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val st = Dedup.connectedComponentsAuto(chain, maxLabelRounds = 10)
+    val st = Dedup.starFallback(chain, "id_a", "id_b", maxStarRounds = 30)(
+      Dedup.labelLoop(chain, maxIters = 10))
     val got = st.result.as[(Long, Long)].collect().toMap
     st.cleanup()
     assert(got.size === 51)
@@ -476,7 +515,7 @@ class DedupSpec extends TestSpark {
     // star contraction collapses it within the default budget
     val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIters = 10)
+      Dedup.labelLoop(chain, maxIters = 10)
     }
     val st = Dedup.connectedComponentsTwoPhase(chain, maxIters = 10)
     val got = st.result.as[(Long, Long)].collect().toMap

@@ -22,7 +22,7 @@ class ReliableStagingSpec extends TestSpark {
   private def ccLabels(): Map[Long, Long] = {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 3L))
       .toDF("id_a", "id_b")
-    val st = graft.operators.Dedup.connectedComponentsStaged(pairs)
+    val st = graft.operators.Dedup.labelLoop(pairs)
     val got = st.result.as[(Long, Long)].collect().toMap
     st.cleanup()
     got
